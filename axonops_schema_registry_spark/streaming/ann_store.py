@@ -14,9 +14,10 @@ ORDER.  Unlike the dedup stores there is NO out-of-order repair
 domain: a vector's buckets depend only on the FIXED planes (fitted
 once at creation, persisted, parameter-pinned), never on other
 vectors, so ingest commutes and a late batch is just another insert.
-The store therefore carries the _EpochStore discipline it needs
-(params pin, watermark guard, generation-numbered compaction) and
-none of the election/repair machinery it structurally cannot need.
+The store therefore carries only the :class:`.epoch_log.EpochLog`
+contract (params pin, watermark guard, generation-numbered
+compaction) and none of the election/repair machinery it structurally
+cannot need.
 
 100 TB shape: state is the (id, table, bucket) index — n_tables
 narrow rows per corpus vector — plus the stored vectors for exact
@@ -25,8 +26,8 @@ rerank; per-batch cost is one |batch| × n_planes broadcast expansion
 scan of the stored corpus.  Lookup touches ONE (table, bucket)
 equi-join plus candidates-only rerank — the nn2 plan, reading the
 store instead of re-bucketing the corpus.  Compaction bounds the
-small-files count exactly like the dedup stores (fold below the
-streaming checkpoint's watermark, atomic meta swap).
+small-files count exactly like the dedup stores (the shared
+:mod:`.epoch_log` fold below the streaming checkpoint's watermark).
 
 Reference: axonops/axonops-schema-registry has no ANN surface; this
 family extends the engine for LLM-training-data curation (brief §north
@@ -38,18 +39,17 @@ can replay lookups bit-identically.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from axonops_schema_registry_spark.streaming.dedup_store import (
-    _EpochStore,
-    _write_json_atomic,
+from axonops_schema_registry_spark.streaming.epoch_log import (
+    EpochLog,
+    epoch_dir,
 )
 
 
-class AnnIndexStore(_EpochStore):
+class AnnIndexStore:
     """Persistent hyperplane-LSH index over an append-only vector
     corpus: ``process_batch`` buckets each batch against the fixed
     planes and writes epoch partitions; ``lookup_topk`` serves
@@ -66,15 +66,13 @@ class AnnIndexStore(_EpochStore):
     disk) but still pins the scalar parameters: a store reopened with
     different ``n_bits``/``n_tables``/``plane_base`` would bucket new
     batches incompatibly with the stored index — every lookup would
-    silently miss — so the _EpochStore params check refuses.
+    silently miss — so the params pin refuses.
 
     Corpus ids are expected unique across batches (an index, not a
     dedup filter); an at-least-once REPLAY of the same epoch
     overwrites its own partitions with identical content
     (exactly-once effect, the store-family contract).
     """
-
-    repairs_name = "ann_repairs"  # no repair domain; never populated
 
     def __init__(self, spark: SparkSession, store_dir: str,
                  calibration: DataFrame | None = None,
@@ -95,10 +93,15 @@ class AnnIndexStore(_EpochStore):
         self.vectors_dir = os.path.join(store_dir, "ann_vectors")
         self.tombstones_dir = os.path.join(store_dir, "ann_tombstones")
         self.planes_dir = os.path.join(store_dir, "ann_planes")
-        self.meta_path = os.path.join(store_dir, "ann_meta.json")
-        self.params_path = os.path.join(store_dir, "ann_params.json")
+        # bases keep the epoch column (tombstones resolve by epoch);
+        # compaction CONSUMES tombstones below the watermark instead of
+        # folding them, so they never get a base
+        self.log = EpochLog(
+            spark, store_dir, (self.buckets_dir, self.vectors_dir),
+            "ann_meta.json", "ann_params.json", label="ANN-store",
+            keep_epoch=True, consumed=(self.tombstones_dir,))
         os.makedirs(store_dir, exist_ok=True)
-        self._check_params()
+        self._pin()
         if not os.path.isdir(self.planes_dir):
             if calibration is None:
                 raise RuntimeError(
@@ -119,13 +122,12 @@ class AnnIndexStore(_EpochStore):
                     f"{plane_base + 2 * n_bits * n_tables}) must all "
                     "be present")
             tmp = self.planes_dir + "_tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
             planes.write.mode("overwrite").parquet(tmp)
             os.replace(tmp, self.planes_dir)  # atomic plane commit
         self.planes = (spark.read.parquet(self.planes_dir)
                        .localCheckpoint(eager=True))
         if self.planes.count() != n_bits * n_tables:
-            # params.json is the pin; this guards the residual hole
+            # ann_params.json is the pin; this guards the residual hole
             # (pin deleted by hand after planes were fitted under
             # different parameters, then re-pinned by a fresh open)
             raise RuntimeError(
@@ -134,45 +136,10 @@ class AnnIndexStore(_EpochStore):
                 f"n_bits*n_tables = {n_bits * n_tables}; the store "
                 "was created under different parameters")
 
-    # -- _EpochStore plumbing ----------------------------------------------
-
-    def _dirs(self) -> tuple[str, ...]:
-        return (self.buckets_dir, self.vectors_dir)
-
-    def _signature_params(self) -> dict:
-        return {"n_bits": self.n_bits, "n_tables": self.n_tables,
-                "plane_base": self.plane_base,
-                "id_col": self.id_col, "vec_col": self.vec_col}
-
-    def _read_dir(self, path: str,
-                  require_base: bool = True) -> DataFrame | None:
-        """Compacted base generation + live epoch partitions, epoch
-        column retained (the LineDedupStore read shape).
-        ``require_base=False`` for the tombstones directory: compaction
-        CONSUMES tombstones below the watermark instead of folding
-        them, so a missing tombstone base under a committed generation
-        is the normal state, not corruption."""
-        meta = self._meta()
-        parts = []
-        if meta["gen"] >= 0:
-            base = self._base_dir(path, meta["gen"])
-            if os.path.isdir(base):
-                parts.append(self.spark.read.parquet(base))
-            elif require_base:
-                raise RuntimeError(
-                    f"ANN store meta {self.meta_path} references "
-                    f"missing base generation {base}")
-        if (os.path.isdir(path)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(path))):
-            parts.append(self.spark.read.parquet(path)
-                         .filter(F.col("epoch") >= meta["below"]))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _pin(self) -> None:
+        self.log.pin({"n_bits": self.n_bits, "n_tables": self.n_tables,
+                      "plane_base": self.plane_base,
+                      "id_col": self.id_col, "vec_col": self.vec_col})
 
     # -- ingestion ----------------------------------------------------------
 
@@ -186,13 +153,9 @@ class AnnIndexStore(_EpochStore):
             _portable_buckets,
         )
 
-        self._check_params()
+        self._pin()
         epoch_id = int(epoch_id)
-        if epoch_id < self._meta()["below"]:
-            raise RuntimeError(
-                f"epoch {epoch_id} is below the compaction watermark "
-                f"{self._meta()['below']}; compact() must only fold "
-                "epochs the streaming checkpoint can no longer replay")
+        self.log.assert_live(epoch_id)
         vecs = new_vecs.select(
             F.col(self.id_col).alias("corpus_id"),
             F.col(self.vec_col).alias("corpus_vec"))
@@ -200,9 +163,9 @@ class AnnIndexStore(_EpochStore):
                                     self.planes) \
             .localCheckpoint(eager=True)
         buckets.write.mode("overwrite").parquet(
-            os.path.join(self.buckets_dir, f"epoch={epoch_id}"))
+            epoch_dir(self.buckets_dir, epoch_id))
         vecs.write.mode("overwrite").parquet(
-            os.path.join(self.vectors_dir, f"epoch={epoch_id}"))
+            epoch_dir(self.vectors_dir, epoch_id))
         return buckets
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -227,21 +190,17 @@ class AnnIndexStore(_EpochStore):
         past one watermark window.  ``ids`` is a one-column frame of
         ``id_col`` values; an identical replay overwrites its own
         partition (exactly-once effect, the store-family contract)."""
-        self._check_params()
+        self._pin()
         epoch_id = int(epoch_id)
-        if epoch_id < self._meta()["below"]:
-            raise RuntimeError(
-                f"epoch {epoch_id} is below the compaction watermark "
-                f"{self._meta()['below']}; compact() must only fold "
-                "epochs the streaming checkpoint can no longer replay")
+        self.log.assert_live(epoch_id)
         ids.select(F.col(self.id_col).alias("corpus_id")).distinct() \
             .write.mode("overwrite").parquet(
-                os.path.join(self.tombstones_dir, f"epoch={epoch_id}"))
+                epoch_dir(self.tombstones_dir, epoch_id))
 
     def _alive(self, frame: DataFrame) -> DataFrame:
         """Apply live tombstones: keep a row iff its insert epoch is
         above the id's newest tombstone epoch (or it has none)."""
-        tombs = self._read_dir(self.tombstones_dir, require_base=False)
+        tombs = self.log.read(self.tombstones_dir)
         if tombs is None:
             return frame
         t = (tombs.groupBy("corpus_id")
@@ -257,12 +216,12 @@ class AnnIndexStore(_EpochStore):
         """The stored LIVE (corpus_id, table, bucket) index —
         tombstones applied — the frame the store-vs-batch equality
         target compares."""
-        b = self._read_dir(self.buckets_dir)
+        b = self.log.read(self.buckets_dir)
         return None if b is None else \
             self._alive(b).select("corpus_id", "table", "bucket")
 
     def vectors(self) -> DataFrame | None:
-        v = self._read_dir(self.vectors_dir)
+        v = self.log.read(self.vectors_dir)
         return None if v is None else \
             self._alive(v).select("corpus_id", "corpus_vec")
 
@@ -302,54 +261,22 @@ class AnnIndexStore(_EpochStore):
 
     def compact(self, below_epoch: int) -> None:
         """Fold every epoch partition < ``below_epoch`` of both data
-        directories into the next generation-numbered base.  The
-        _EpochStore crash-safe commit order: (1) bases fully written,
-        (2) one atomic ``ann_meta.json`` swap — the commit point —
-        (3) superseded directories swept best-effort."""
-        meta = self._meta()
-        if below_epoch <= meta["below"]:
+        directories into the next generation-numbered base."""
+        merged = self.log.fold_views(below_epoch)
+        if merged is None:
             return
-        merged = {p: self._read_dir(p) for p in self._dirs()}
-        missing = [p for p, m in merged.items() if m is None]
-        if len(missing) == len(merged):
-            return  # empty store
-        if missing:
-            raise RuntimeError(
-                f"ANN store at {self.store_dir} has data in some "
-                f"directories but none in {missing}; corrupt layout — "
-                "refusing to compact")
         # tombstones below the watermark are APPLIED to the folded
         # base and consumed (they can no longer affect rows outside
         # it: every insert they could kill has epoch <= their own
         # epoch < below_epoch and is part of this fold); tombstones at
         # or above the watermark stay live and keep applying at read
-        tombs = self._read_dir(self.tombstones_dir, require_base=False)
-        consumed = None
+        tombs = self.log.read(self.tombstones_dir, below_epoch)
         if tombs is not None:
-            consumed = (tombs.filter(F.col("epoch") < below_epoch)
-                        .groupBy("corpus_id")
+            consumed = (tombs.groupBy("corpus_id")
                         .agg(F.max("epoch").alias("__tomb_e")))
-        new_gen = meta["gen"] + 1
-        for path, frame in merged.items():
-            folded = frame.filter(F.col("epoch") < below_epoch)
-            if consumed is not None:
-                folded = (folded.join(consumed, "corpus_id", "left")
+            merged = {p: (m.join(consumed, "corpus_id", "left")
                           .filter(F.col("__tomb_e").isNull()
-                                  | (F.col("epoch")
-                                     > F.col("__tomb_e")))
+                                  | (F.col("epoch") > F.col("__tomb_e")))
                           .drop("__tomb_e"))
-            folded.write.mode("overwrite").parquet(
-                self._base_dir(path, new_gen))
-        _write_json_atomic(self.meta_path,
-                           {"gen": new_gen, "below": below_epoch})
-        for path in (*merged, self.tombstones_dir):
-            for g in range(new_gen):
-                shutil.rmtree(self._base_dir(path, g),
-                              ignore_errors=True)
-            if os.path.isdir(path):
-                for d in os.listdir(path):
-                    if (d.startswith("epoch=")
-                            and d.split("=", 1)[1].lstrip("-").isdigit()
-                            and int(d.split("=", 1)[1]) < below_epoch):
-                        shutil.rmtree(os.path.join(path, d),
-                                      ignore_errors=True)
+                      for p, m in merged.items()}
+        self.log.commit(merged, below_epoch)

@@ -156,10 +156,21 @@ def cef_format(audit: DataFrame, vendor: str = "axonops",
         ext).alias("line"))
 
 
+def _watermarked(audit: DataFrame, watermark: str) -> DataFrame:
+    """``audit`` with an event-time watermark on ``ts`` — unless an
+    upstream transform already set one (its delay then stands): Spark
+    refuses to redefine a watermark, and skipping it is what lets these
+    transforms compose on one stream, e.g.
+    ``windowed_metrics(dedup_by_request_id(stream))``."""
+    if "spark.watermarkDelayMs" in audit.schema["ts"].metadata:
+        return audit
+    return audit.withWatermark("ts", watermark)
+
+
 def dedup_by_request_id(audit: DataFrame,
                         watermark: str = "30 seconds") -> DataFrame:
     """Exactly-once-ish dedup on request_id within the watermark horizon."""
-    wm = audit.withWatermark("ts", watermark)
+    wm = _watermarked(audit, watermark)
     if audit.isStreaming:
         return wm.dropDuplicatesWithinWatermark(["request_id"])
     return wm.dropDuplicates(["request_id"])  # batch-mode equivalent
@@ -170,8 +181,7 @@ def rate_limit_flags(audit: DataFrame, window: str = "1 minute",
                      max_per_window: int = 10) -> DataFrame:
     """ST6: token-bucket rate limiting as windowed per-actor analytics —
     actors exceeding ``max_per_window`` requests per window are flagged."""
-    return (audit
-            .withWatermark("ts", watermark)
+    return (_watermarked(audit, watermark)
             .groupBy(F.window("ts", window).alias("w"), F.col("actor_id"))
             .agg(F.count(F.lit(1)).alias("n_requests"))
             .select(F.col("w.start").alias("window_start"),
@@ -184,8 +194,7 @@ def windowed_metrics(audit: DataFrame, window: str = "1 hour",
                      watermark: str = "30 seconds") -> DataFrame:
     """ST7: per-window, per-type request metrics (count / failures / p95)
     — the streaming analog of the reference's Prometheus histograms."""
-    return (audit
-            .withWatermark("ts", watermark)
+    return (_watermarked(audit, watermark)
             .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.sum(F.when(F.col("outcome") == "failure", 1)
@@ -201,8 +210,7 @@ def session_metrics(audit: DataFrame, gap: str = "5 minutes",
     """Session-windowed per-actor activity (idiomatic extension the
     reference lacks — SURVEY.md §2.11): sessions close after ``gap`` of
     actor inactivity; one row per (actor, session) with bounds + counts."""
-    return (audit
-            .withWatermark("ts", watermark)
+    return (_watermarked(audit, watermark)
             .groupBy(F.session_window("ts", gap).alias("w"),
                      F.col("actor_id"))
             .agg(F.count(F.lit(1)).alias("n_events"),

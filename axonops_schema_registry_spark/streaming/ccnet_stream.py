@@ -47,9 +47,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.operators.core import release_checkpoint
-from axonops_schema_registry_spark.streaming.dedup_store import (
-    _write_json_atomic,
+from axonops_schema_registry_spark.streaming.epoch_log import (
+    EpochLog,
+    epoch_dir,
+    live_epochs,
 )
+
+#: receipt columns, one row per (source, epoch)
+_RECEIPT = ("source", "n_docs", "n_lang", "n_dedup", "blocks_removed",
+            "n_head_middle", "n_quality", "n_selected", "tokens_selected",
+            "id_checksum", "max_rank")
 
 
 class CCNetStreamSink:
@@ -83,6 +90,9 @@ class CCNetStreamSink:
 
         self.store_dir = store_dir
         self.receipts_dir = os.path.join(store_dir, "receipts")
+        self.log = EpochLog(calibration.sparkSession, store_dir,
+                            (self.receipts_dir,), "receipts_meta.json",
+                            label="receipt")
         self.strict = strict
         os.makedirs(store_dir, exist_ok=True)
         art = ccnet_calibration(calibration, budget_tokens, n_quality,
@@ -112,12 +122,7 @@ class CCNetStreamSink:
         )
 
         epoch_id = int(epoch_id)
-        if epoch_id < self._receipts_meta()["below"]:
-            raise RuntimeError(
-                f"epoch {epoch_id} is below the receipt compaction "
-                f"watermark {self._receipts_meta()['below']}; "
-                "compact_receipts() must only fold epochs the "
-                "streaming checkpoint can no longer replay")
+        self.log.assert_live(epoch_id)
         docs = (batch_df.select("doc_id", "source", "text")
                 .localCheckpoint(eager=True))  # arrivals + gate input
         n_docs = docs.groupBy("source").agg(
@@ -183,8 +188,8 @@ class CCNetStreamSink:
         self.admission(qkept, epoch_id)
         spark = batch_df.sparkSession
         self._write_order_state(qkept, epoch_id)
-        adm = spark.read.parquet(os.path.join(
-            self.admission.admissions_dir, f"epoch={epoch_id}"))
+        adm = spark.read.parquet(epoch_dir(self.admission.admissions_dir,
+                                           epoch_id))
         sel = (adm.groupBy("source")
                .agg(F.count(F.lit(1)).alias("n_selected"),
                     F.max("cum_tokens").alias("tokens_selected"),
@@ -193,9 +198,7 @@ class CCNetStreamSink:
         out = n_docs
         for frame in (lang_c, ded_c, hm_c, q_c, sel):
             out = out.join(frame, "source", "left")
-        tail = ("n_lang", "n_dedup", "blocks_removed", "n_head_middle",
-                "n_quality", "n_selected", "tokens_selected",
-                "id_checksum", "max_rank")
+        tail = _RECEIPT[2:]
         receipt = out.select(
             "source", "n_docs",
             *[F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(c)
@@ -203,7 +206,7 @@ class CCNetStreamSink:
         # overwrite keeps an at-least-once replay idempotent (every
         # upstream leg recomputes identically from pre-epoch state)
         receipt.write.mode("overwrite").parquet(
-            os.path.join(self.receipts_dir, f"epoch={epoch_id}"))
+            epoch_dir(self.receipts_dir, epoch_id))
         for frame in (docs, gated, ln, hm, qkept):
             release_checkpoint(frame)
 
@@ -251,17 +254,11 @@ class CCNetStreamSink:
         spark = gated.sparkSession
         # admission leg: prior epochs' per-source maxima
         state_dir = os.path.join(self.store_dir, "order_state")
-        prior = sorted(
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(state_dir)
-                      if os.path.isdir(state_dir) else [])
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit())
-        prior = [e for e in prior if e < epoch_id]
+        prior = [e for e in live_epochs(state_dir) if e < epoch_id]
         bad_sources: list[str] = []
         if prior:
-            st = spark.read.parquet(*[
-                os.path.join(state_dir, f"epoch={e}") for e in prior])
+            st = spark.read.parquet(*[epoch_dir(state_dir, e)
+                                      for e in prior])
             mx = (st.groupBy("source")
                   .agg(F.max(F.struct(F.col("max_h").alias("h"),
                                       F.col("max_hid").alias("i")))
@@ -284,8 +281,8 @@ class CCNetStreamSink:
                .filter(self.line_store._eligible())
                .groupBy("__bkey")
                .agg(F.min("__ord").alias("__bmin")))
-        stored = self.line_store._read_dir(
-            self.line_store.elections_dir, before_epoch=epoch_id)
+        stored = self.line_store.log.read(
+            self.line_store.elections_dir, epoch_id)
         bad_keys: list = []
         if stored is not None:
             bad_keys = [
@@ -329,8 +326,8 @@ class CCNetStreamSink:
                          F.col("mn.i").alias("min_hid"),
                          F.col("mx.h").alias("max_h"),
                          F.col("mx.i").alias("max_hid")))
-        state.write.mode("overwrite").parquet(os.path.join(
-            self.store_dir, "order_state", f"epoch={epoch_id}"))
+        state.write.mode("overwrite").parquet(epoch_dir(
+            os.path.join(self.store_dir, "order_state"), epoch_id))
 
     def order_report(self, spark) -> DataFrame | None:
         """Per-epoch verdict on the two stream ≡ batch arrival-order
@@ -354,11 +351,7 @@ class CCNetStreamSink:
         from pyspark.sql import Window
 
         path = os.path.join(self.store_dir, "order_state")
-        epoch_ids = sorted(
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(path) if os.path.isdir(path) else [])
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit())
+        epoch_ids = live_epochs(path)
         if not epoch_ids:
             return None
         # the report covers every epoch= partition ON DISK (ADVICE
@@ -390,8 +383,7 @@ class CCNetStreamSink:
         # minimal __first recurs in several epochs (an identical
         # replay) must resolve to the EARLIEST such epoch
         # deterministically (ADVICE r17).
-        el = self.line_store._read_dir(self.line_store.elections_dir,
-                                       before_epoch=1 << 62)
+        el = self.line_store.log.read(self.line_store.elections_dir)
         bad_epochs = None
         if el is not None:
             per_key = (el.groupBy("__bkey")
@@ -423,70 +415,30 @@ class CCNetStreamSink:
 
     # -- receipt compaction (r18, VERDICT r17 stretch #8) --------------------
 
-    def _receipts_meta(self) -> dict:
-        """{"gen": current receipt base generation or -1, "below":
-        first non-folded epoch} — the _EpochStore meta contract:
-        missing file = no compaction yet; present-but-unreadable is
-        corruption and fails loudly (compaction already deleted the
-        folded epoch dirs)."""
-        import json
-
-        path = os.path.join(self.store_dir, "receipts_meta.json")
-        try:
-            with open(path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"gen": -1, "below": 0}
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt receipt meta at {path}: {exc!r}; refusing "
-                "to silently drop folded receipts") from exc
-
-    def _receipts_view(self, spark) -> DataFrame | None:
-        """Folded base (one pre-aggregated row per source — sums and
-        maxes are associative, so it composes with live epochs under
-        the same aggregate) + live epoch partitions >= the
-        watermark."""
-        meta = self._receipts_meta()
-        cols = ["source", "n_docs", "n_lang", "n_dedup",
-                "blocks_removed", "n_head_middle", "n_quality",
-                "n_selected", "tokens_selected", "id_checksum",
-                "max_rank"]
-        parts = []
-        if meta["gen"] >= 0:
-            base = os.path.join(self.receipts_dir + "_base",
-                                f"g{meta['gen']}")
-            if not os.path.isdir(base):
-                raise RuntimeError(
-                    f"receipt meta references missing base "
-                    f"generation {base}")
-            parts.append(spark.read.parquet(base).select(*cols))
-        if (os.path.isdir(self.receipts_dir)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(self.receipts_dir))):
-            live = spark.read.parquet(self.receipts_dir)
-            parts.append(live.filter(F.col("epoch") >= meta["below"])
-                         .select(*cols))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    @staticmethod
+    def _rollup(receipts: DataFrame) -> DataFrame:
+        """One row per source: the additive receipt columns sum; the
+        admission prefix is monotone across epochs, so
+        ``tokens_selected`` / ``max_rank`` take the max."""
+        return (receipts.groupBy("source")
+                .agg(*[F.sum(c).cast("bigint").alias(c)
+                       for c in ("n_docs", "n_lang", "n_dedup",
+                                 "blocks_removed", "n_head_middle",
+                                 "n_quality", "n_selected",
+                                 "id_checksum")],
+                     F.max("tokens_selected").cast("bigint")
+                     .alias("tokens_selected"),
+                     F.max("max_rank").cast("bigint").alias("max_rank"))
+                .select(*_RECEIPT))
 
     def compact_receipts(self, spark, below_epoch: int) -> None:
         """Fold every ``receipts/epoch=`` partition < ``below_epoch``
-        into the next generation-numbered base — one row per source
-        (the receipt columns are additive by source except the two
-        monotone maxes, so the fold is the same groupBy
-        ``final_receipt`` runs) — bounding the per-epoch small-file
-        count exactly like the two stores' compact() (the growth
-        class admission/compact closed in r17).  ``below_epoch`` must
-        be at-or-below the streaming checkpoint's committed watermark
-        (enforced on the ingest side by the ``__call__`` guard).
-        Crash-safe in the _EpochStore commit order: base fully
-        written, one atomic ``receipts_meta.json`` swap, superseded
-        directories swept best-effort.
+        into the next generation-numbered base — one row per source,
+        the same :meth:`_rollup` ``final_receipt`` runs, so the folded
+        base composes with the live epochs under it.  ``below_epoch``
+        must be at-or-below the streaming checkpoint's committed
+        watermark (enforced on the ingest side by the ``__call__``
+        guard).
 
         ``order_state/epoch=`` partitions deliberately do NOT fold:
         each is a sources-sized row set whose PER-EPOCH granularity is
@@ -494,62 +446,10 @@ class CCNetStreamSink:
         would erase which epoch violated); their growth is
         O(sources × epochs) rows — config-sized per epoch, the same
         accepted bound as the audit trail itself."""
-        import shutil
-
-        meta = self._receipts_meta()
-        if below_epoch <= meta["below"]:
-            return
-        view = self._receipts_view(spark)
-        if view is None:
-            return
-        # the base must hold ONLY rows below the new watermark: the
-        # current base (all < old below) + live epochs < below_epoch
-        live_keep = []
-        if os.path.isdir(self.receipts_dir):
-            for d in os.listdir(self.receipts_dir):
-                if (d.startswith("epoch=")
-                        and d.split("=", 1)[1].lstrip("-").isdigit()
-                        and meta["below"] <= int(d.split("=", 1)[1])
-                        < below_epoch):
-                    live_keep.append(os.path.join(self.receipts_dir, d))
-        parts = []
-        if meta["gen"] >= 0:
-            parts.append(spark.read.parquet(os.path.join(
-                self.receipts_dir + "_base", f"g{meta['gen']}")))
-        if live_keep:
-            parts.append(spark.read.option(
-                "basePath", self.receipts_dir).parquet(*live_keep)
-                .drop("epoch"))
-        if not parts:
-            return
-        folded = parts[0]
-        for p in parts[1:]:
-            folded = folded.unionByName(p)
-        agg = (folded.groupBy("source")
-               .agg(*[F.sum(c).cast("bigint").alias(c)
-                      for c in ("n_docs", "n_lang", "n_dedup",
-                                "blocks_removed", "n_head_middle",
-                                "n_quality", "n_selected",
-                                "id_checksum")],
-                    F.max("tokens_selected").cast("bigint")
-                    .alias("tokens_selected"),
-                    F.max("max_rank").cast("bigint")
-                    .alias("max_rank")))
-        new_gen = meta["gen"] + 1
-        agg.select("source", "n_docs", "n_lang", "n_dedup",
-                   "blocks_removed", "n_head_middle", "n_quality",
-                   "n_selected", "tokens_selected", "id_checksum",
-                   "max_rank") \
-            .write.mode("overwrite").parquet(os.path.join(
-                self.receipts_dir + "_base", f"g{new_gen}"))
-        _write_json_atomic(
-            os.path.join(self.store_dir, "receipts_meta.json"),
-            {"gen": new_gen, "below": below_epoch})
-        for g in range(new_gen):
-            shutil.rmtree(os.path.join(self.receipts_dir + "_base",
-                                       f"g{g}"), ignore_errors=True)
-        for p in live_keep:
-            shutil.rmtree(p, ignore_errors=True)
+        views = self.log.fold_views(below_epoch)
+        if views is not None:
+            self.log.commit({self.receipts_dir: self._rollup(
+                views[self.receipts_dir])}, below_epoch)
 
     # -- reads ---------------------------------------------------------------
 
@@ -560,21 +460,11 @@ class CCNetStreamSink:
         ``max_rank`` take the max (the admission prefix is monotone
         across epochs).  Reads the folded base + live epochs (see
         :meth:`compact_receipts`)."""
-        eps = self._receipts_view(spark)
+        eps = self.log.read(self.receipts_dir)
         if eps is None:
             return None
-        agg = (eps.groupBy("source")
-               .agg(*[F.sum(c).cast("bigint").alias(c)
-                      for c in ("n_docs", "n_lang", "n_dedup",
-                                "blocks_removed", "n_head_middle",
-                                "n_quality", "n_selected",
-                                "id_checksum")],
-                    F.max("tokens_selected").cast("bigint")
-                    .alias("tokens_selected"),
-                    F.max("max_rank").cast("bigint").alias("max_rank")))
-        tail = ("n_lang", "n_dedup", "blocks_removed", "n_head_middle",
-                "n_quality", "n_selected", "tokens_selected",
-                "id_checksum", "max_rank")
+        agg = self._rollup(eps)
+        tail = _RECEIPT[2:]
         # source universe = calibration budgets UNION streamed receipt
         # sources (ADVICE r17): in the production calibrate-on-sample
         # configuration a streamed source absent from the calibration

@@ -57,12 +57,9 @@ answer.
 At very long stream lifetimes the epoch partitions accumulate small
 files; :meth:`compact` merges every epoch below the streaming
 checkpoint's committed watermark (safe because replays can only target
-epochs at-or-after it) into a generation-numbered base directory.  The
-swap is crash-safe: the new base generation is fully written FIRST,
-then a tiny meta.json is fsynced and atomically replaced
-(``os.replace``), and only then are superseded directories deleted —
-a crash at any point leaves meta.json pointing at one consistent view,
-and orphan directories are swept by the next compaction.
+epochs at-or-after it) into a generation-numbered base directory,
+committed crash-safely by :class:`.epoch_log.EpochLog` (the on-disk
+layout and commit order of every store live there).
 
 Reference analogue: none (the reference has no dedup-at-ingest stream);
 this is the north-star training-pipeline surface (BASELINE.json).
@@ -72,7 +69,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,158 +79,123 @@ from axonops_schema_registry_spark.llm.dedup import (
 )
 from axonops_schema_registry_spark.operators.core import release_checkpoint
 from axonops_schema_registry_spark.operators.text import token_arrays
+from axonops_schema_registry_spark.streaming.epoch_log import (
+    ALL,
+    EpochLog,
+    _write_json_atomic,
+    epoch_dir,
+    live_epochs,
+)
 
 _NOSHINGLE = "__noshingle__"
 
 
-def _read_epochs(spark: SparkSession, path: str, before_epoch: int,
-                 from_epoch: int = 0) -> DataFrame | None:
-    """Epoch partitions in [from_epoch, before_epoch) — the shared
-    read probe for both stores.  An epoch-less directory (every epoch
-    compacted away, or nothing written yet) is unreadable (no schema
-    to infer), so probe before reading."""
-    if not (os.path.isdir(path)
-            and any(d.startswith("epoch=") for d in os.listdir(path))):
-        return None
-    df = spark.read.parquet(path)
-    if "epoch" not in df.columns:
-        return None
-    return df.filter((F.col("epoch") >= from_epoch)
-                     & (F.col("epoch") < before_epoch)).drop("epoch")
-
-
-def _write_json_atomic(path: str, obj: dict) -> None:
-    """fsync + atomic-replace a small JSON commit record, then fsync
-    the parent directory so the rename itself survives power loss —
-    the shared commit-point primitive of every store in this module."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
-    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
-
-
 class _EpochStore:
-    """Shared machinery of the two dedup stores: epoch-partitioned
-    data directories, a generation-numbered compacted base per
-    directory, one fsynced-atomically-replaced meta.json whose swap is
-    the commit point for compaction and reflag, and (for stores that
-    support :meth:`BucketedDedupStore.reflag_incremental`) a stack of
-    REPAIR DELTAS — small parquet overlays, each bounded by one
-    out-of-order batch's bucket neighborhood, applied at read time on
-    top of base+epochs and folded away by the next full commit."""
+    """Shared machinery of the two dedup stores over one
+    :class:`.epoch_log.EpochLog` (``self.log``): the out-of-order
+    bookkeeping the meta file carries for them (``emm``, ``base_max``,
+    ``repaired``, ``nrep``, ``needs_full_reflag``) and, for
+    :meth:`BucketedDedupStore.reflag_incremental`, a stack of REPAIR
+    DELTAS — small parquet overlays, each bounded by one out-of-order
+    batch's bucket neighborhood, applied at read time on top of
+    base+epochs and folded away by the next full commit."""
 
     spark: SparkSession
     store_dir: str
-    meta_path: str
+    log: EpochLog
     #: subdirectory name for repair deltas (subclasses set it; the two
     #: stores may share one store_dir, so the names must not collide)
     repairs_name: str = "repairs"
 
-    def _dirs(self) -> tuple[str, ...]:
-        raise NotImplementedError
-
-    # -- signature-parameter pinning ---------------------------------------
+    def _open_log(self, dirs: tuple[str, ...], meta_name: str,
+                  params_name: str) -> None:
+        self.log = EpochLog(
+            self.spark, self.store_dir, dirs, meta_name, params_name,
+            label="dedup-store",
+            describe_extra=lambda: {
+                "outstanding_late": sorted(self._outstanding_late())})
 
     def _signature_params(self) -> dict:
         """The parameters that define the store's on-disk signature
-        space (bucketing scheme, thresholds).  Reopening a store with
-        DIFFERENT values would bucket new content incompatibly with
-        the stored bucket tables — every lookup would miss and the
-        store would silently stop flagging duplicates against the
-        prior corpus, the worst possible failure mode for a dedup
-        filter.  Subclasses enumerate theirs."""
+        space (bucketing scheme, thresholds) — pinned by
+        :meth:`.epoch_log.EpochLog.pin`: reopening with different
+        values would bucket new content incompatibly with the stored
+        bucket tables, and the store would silently stop flagging
+        duplicates against the prior corpus.  Subclasses enumerate
+        theirs."""
         raise NotImplementedError
 
-    def _check_params(self) -> None:
-        """Pin the signature parameters to disk on first ingest and
-        fail loudly on any later mismatch (same discipline as the
-        corrupt-meta guard: a wrong answer must never be silent).
-        The write is tmp+atomic-replace so a crash mid-write leaves
-        either no file (next ingest re-pins) or the full file.
+    def _pin(self) -> None:
+        self.log.pin(self._signature_params())
 
-        A MISSING params.json only means "brand-new store" when the
-        store is actually empty: a store created before parameter
-        pinning existed has data but no params.json, and auto-pinning
-        the CURRENT session's values onto it would bless whatever this
-        session happens to pass — exactly the silent mismatch the pin
-        exists to prevent (ADVICE r10).  Non-empty + no params.json
-        therefore refuses and points at the migration step (write the
-        original creation parameters to params.json by hand)."""
-        want = self._signature_params()
-        try:
-            with open(self.params_path) as f:
-                have = json.load(f)
-        except FileNotFoundError:
-            has_data = os.path.exists(self.meta_path) or any(
-                os.path.isdir(d) and os.listdir(d)
-                for d in self._dirs()) or any(
-                os.path.isdir(d + "_base") for d in self._dirs())
-            if has_data:
-                raise RuntimeError(
-                    f"dedup store at {self.store_dir} holds data but "
-                    f"no signature-parameter pin ({self.params_path} "
-                    "missing) — a pre-pinning legacy store; refusing "
-                    "to auto-pin this session's parameters over "
-                    "unknown creation-time values.  Migrate once by "
-                    "writing the ORIGINAL creation parameters "
-                    f"({sorted(want)}) to that file, then reopen.")
-            os.makedirs(self.store_dir, exist_ok=True)
-            tmp = self.params_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(want, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self.params_path)
-            return
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt dedup-store params at {self.params_path}: "
-                f"{exc!r}; refusing to ingest with unverifiable "
-                "signature parameters") from exc
-        if have != want:
-            diff = {k: (have.get(k), want.get(k))
-                    for k in sorted(set(have) | set(want))
-                    if have.get(k) != want.get(k)}
-            raise RuntimeError(
-                f"dedup store at {self.store_dir} was created with "
-                f"different signature parameters (stored vs this "
-                f"session): {diff}; matching buckets require identical "
-                "parameters — reopen with the stored values or build a "
-                "new store")
+    def all_flags(self) -> DataFrame | None:
+        """Every persisted per-document verdict —
+        (id, is_dup, dup_of) — from the compacted base plus all live
+        epochs.  The production read path (``self.flags`` is test-only
+        driver state)."""
+        stored = self._stored_view(self.flags_dir, ALL)
+        if stored is None:
+            return None
+        return stored.select(self.id_col, "is_dup", "dup_of")
 
-    # -- store access -----------------------------------------------------
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        flags = self.process_batch(batch_df, epoch_id)
+        if self.track_flags:
+            for r in flags.collect():
+                self.flags[r[self.id_col]] = (r["is_dup"], r["dup_of"])
+        release_checkpoint(flags)
 
-    def _meta(self) -> dict:
-        """{"gen": current base generation or -1, "below": first
-        non-compacted epoch} — the one file whose atomic os.replace
-        commits a compaction.
+    # -- the per-batch verdict shape both stores share ----------------------
 
-        Only a MISSING file means "no compaction yet"; a present-but-
-        unreadable meta.json is store corruption and must fail loudly —
-        compaction already deleted the pre-watermark epoch dirs, so
-        silently defaulting here would make the whole compacted base
-        generation invisible and the store would stop flagging
-        duplicates against the prior corpus."""
-        try:
-            with open(self.meta_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"gen": -1, "below": 0}
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt dedup-store meta at {self.meta_path}: {exc!r}; "
-                "refusing to silently drop compacted state") from exc
+    def _group_reps(self, fp_rows: DataFrame, nid: str,
+                    epoch_id: int) -> DataFrame:
+        """(``__fp``, ``__brep``, ``rep``, ``eff``), checkpointed: each
+        fingerprint group's smallest batch id beside the stored
+        group's representative and effective original (null for a
+        fingerprint the store has not seen)."""
+        group_rep = (fp_rows.groupBy("__fp")
+                     .agg(F.min(nid).alias("__brep")))
+        stored_fp = self._stored_view(self.fps_dir, epoch_id)
+        if stored_fp is not None:
+            group_rep = group_rep.join(stored_fp, "__fp", "left")
+        else:
+            id_type = dict(fp_rows.dtypes)[nid]
+            group_rep = (group_rep
+                         .withColumn("rep", F.lit(None).cast(id_type))
+                         .withColumn("eff", F.lit(None).cast(id_type)))
+        return group_rep.localCheckpoint(eager=True)
 
-    @staticmethod
-    def _base_dir(path: str, gen: int) -> str:
-        return os.path.join(path + "_base", f"g{gen}")
+    def _verdicts(self, fp_rows: DataFrame, group_rep: DataFrame,
+                  new_groups: DataFrame, rep_dup: DataFrame,
+                  nid: str) -> tuple[DataFrame, DataFrame]:
+        """(flags, new_fps) of one batch.  New-fingerprint group
+        members propagate from the rep's verdict (``rep_dup``:
+        ``__brep`` → ``__rdup``); known-fingerprint members are dups of
+        the stored effective original (eff = coalesce(rep's dup_of,
+        rep) at store time).  ``flags`` is checkpointed."""
+        nf = (fp_rows.join(new_groups, "__fp")
+              .join(rep_dup, "__brep", "left")
+              .select(nid, "__fp", F.col("__brep").alias("rep"),
+                      F.when(F.col(nid) == F.col("__brep"),
+                             F.col("__rdup"))
+                      .otherwise(F.coalesce(F.col("__rdup"),
+                                            F.col("__brep")))
+                      .alias("dup_of")))
+        kf = (fp_rows
+              .join(group_rep.filter(F.col("rep").isNotNull())
+                    .select("__fp", "rep", "eff"), "__fp")
+              .select(nid, "__fp", "rep", F.col("eff").alias("dup_of")))
+        flags = (nf.unionByName(kf)
+                 .select(F.col(nid).alias(self.id_col),
+                         F.col("dup_of").isNotNull().alias("is_dup"),
+                         "dup_of", "__fp", "rep")
+                 .localCheckpoint(eager=True))
+        new_fps = (new_groups.join(rep_dup, "__brep", "left")
+                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
+                   .select("__fp", F.col("__brep").alias("rep"),
+                           F.coalesce(F.col("__rdup"), F.col("__brep"))
+                           .alias("eff")))
+        return flags, new_fps
 
     # -- out-of-order arrival tracking (ADVICE r11) -------------------------
 
@@ -254,11 +215,11 @@ class _EpochStore:
                       F.max(id_col).alias("mx")).first()
         if row.mn is None:
             return
-        meta = self._meta()
+        meta = self.log.meta()
         emm = meta.get("emm", {})
         emm[str(epoch_id)] = [row.mn, row.mx]
         meta["emm"] = emm
-        self._write_meta(meta)
+        self.log.write_meta(meta)
 
     def _outstanding_late(self) -> set[int]:
         """Epochs ingested out-of-order (min id undercuts the max id
@@ -274,7 +235,7 @@ class _EpochStore:
         epochs (schema-only partitions) record nothing at ingest and
         are excluded by the row probe in ``_untracked_live_epochs``,
         never flagged here."""
-        meta = self._meta()
+        meta = self.log.meta()
         emm = sorted((int(k), v) for k, v in meta.get("emm", {}).items())
         run = meta.get("base_max")
         late: set[int] = set()
@@ -296,21 +257,11 @@ class _EpochStore:
         many untracked epochs costs one Spark job per operation, not
         one per epoch; the common healthy-store case (no candidates)
         costs zero."""
-        meta = self._meta()
+        meta = self.log.meta()
         tracked = {int(k) for k in meta.get("emm", {})}
-        floor = meta["below"]
-        candidates: list[str] = []
-        if os.path.isdir(self.flags_dir):
-            for d in sorted(os.listdir(self.flags_dir)):
-                if not d.startswith("epoch="):
-                    continue
-                tail = d.split("=", 1)[1]
-                if not tail.lstrip("-").isdigit():
-                    continue
-                e = int(tail)
-                if e < floor or e in tracked:
-                    continue
-                candidates.append(os.path.join(self.flags_dir, d))
+        candidates = [epoch_dir(self.flags_dir, e)
+                      for e in live_epochs(self.flags_dir)
+                      if e >= meta["below"] and e not in tracked]
         if not candidates:
             return []
         live = (self.spark.read.option("basePath", self.flags_dir)
@@ -328,19 +279,20 @@ class _EpochStore:
         earlier ones).  ``nrep`` in meta.json is the commit record —
         an orphan r<n> directory from a crash mid-repair is invisible
         (nrep not advanced) and is overwritten by the next repair."""
-        n = self._meta().get("nrep", 0)
+        n = self.log.meta().get("nrep", 0)
         return [os.path.join(self._repairs_root(), f"r{i}")
                 for i in range(n)]
 
     def _stored_view(self, path: str,
                      before_epoch: int) -> DataFrame | None:
-        """:meth:`_stored` with all committed repair deltas applied —
+        """:meth:`.epoch_log.EpochLog.read` with all committed repair
+        deltas applied —
         THE read path for every consumer (per-batch joins, all_flags,
         compaction folds, full reflag).  Deltas are replace-only
         overlays (no inserts), so applying them to an epoch-ranged
         subset is always safe, and re-applying them to already-folded
         base rows is a value-level no-op."""
-        df = self._stored(path, before_epoch)
+        df = self.log.read(path, before_epoch)
         if df is None:
             return None
         for rd in self._repair_dirs():
@@ -600,9 +552,9 @@ class _EpochStore:
         path)."""
         if below_epoch is None:
             raise TypeError("below_epoch is required")
-        self._check_params()
+        self._pin()
         self._assert_quiescent(below_epoch)
-        meta = self._meta()
+        meta = self.log.meta()
         floor = meta["below"]
         if meta.get("needs_full_reflag"):
             raise RuntimeError(
@@ -654,8 +606,7 @@ class _EpochStore:
                     f"late epoch {e} outside the live range "
                     f"[{floor}, {below_epoch}) — already compacted "
                     "epochs can only be repaired by the full reflag()")
-            if not os.path.isdir(os.path.join(self.flags_dir,
-                                              f"epoch={e}")):
+            if not os.path.isdir(epoch_dir(self.flags_dir, e)):
                 raise RuntimeError(
                     f"late epoch {e} has no flags partition under "
                     f"{self.flags_dir}")
@@ -665,7 +616,7 @@ class _EpochStore:
         mid = F.col(self.id_col)
 
         late_ids = (self.spark.read.parquet(
-            *[os.path.join(self.flags_dir, f"epoch={e}") for e in late])
+            *[epoch_dir(self.flags_dir, e) for e in late])
             .select(self.id_col).distinct())
         touched_fps = (members.join(F.broadcast(late_ids), self.id_col)
                        .filter(~F.col("__fp").startswith(_NOSHINGLE))
@@ -791,10 +742,10 @@ class _EpochStore:
                            (rep_map, "repmap")):
             frame.write.mode("overwrite").parquet(
                 os.path.join(rd, sub))
-        self._write_meta({**meta, "nrep": n + 1,
-                          "repaired": sorted(
-                              set(meta.get("repaired", []))
-                              | set(late))})  # the commit point
+        self.log.write_meta({**meta, "nrep": n + 1,
+                             "repaired": sorted(
+                                 set(meta.get("repaired", []))
+                                 | set(late))})  # the commit point
         if stats is not None:
             stats["touched_rows"] = mt.count()
             stats["evicted"] = (0 if evicted is None
@@ -803,59 +754,54 @@ class _EpochStore:
                                       else raff.count())
         for ck in (mt, groups, aff, *pair_cks):
             release_checkpoint(ck)
+        self._refresh_flags()
+
+    def _refresh_flags(self) -> None:
         if self.track_flags:
             self.flags = {r[self.id_col]: (r["is_dup"], r["dup_of"])
                           for r in self.all_flags().collect()}
 
-    def _write_meta(self, meta: dict) -> None:
-        """fsync + atomic-replace meta.json, then fsync the parent
-        directory so the rename itself survives power loss — the
-        shared commit point for compaction, reflag, and repairs."""
-        _write_json_atomic(self.meta_path, meta)
-
-    def _stored(self, path: str, before_epoch: int) -> DataFrame | None:
-        """Everything accepted strictly BEFORE the epoch being
-        processed — a replayed epoch must not see its own earlier
-        (failed) write: the current base generation (epochs below the
-        compaction watermark) plus the live epoch partitions in
-        [watermark, before_epoch)."""
-        meta = self._meta()
-        parts = []
-        if meta["gen"] >= 0:
-            base = self._base_dir(path, meta["gen"])
-            if not os.path.isdir(base):
-                # meta is the commit record: a base it points at that is
-                # missing on disk is corruption, not "no prior state"
-                raise RuntimeError(
-                    f"dedup-store meta {self.meta_path} references "
-                    f"missing base generation {base}")
-            parts.append(self.spark.read.parquet(base))
-        live = _read_epochs(self.spark, path, before_epoch,
-                            from_epoch=meta["below"])
-        if live is not None:
-            parts.append(live)
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+    def _commit_reflag(self, members: DataFrame, true_rep: DataFrame,
+                       rep_dup: DataFrame,
+                       signatures: dict[str, DataFrame],
+                       below_epoch: int) -> None:
+        """Shared tail of the two full reflags: propagate the rep-level
+        first-wins verdicts (``rep_dup``: ``__trep`` → ``__rdup``) to
+        every member of each fingerprint group (``true_rep``: ``__fp``
+        → ``__trep``), then commit them with the re-keyed
+        ``signatures`` as the next base generation."""
+        mid = F.col(self.id_col)
+        new_flags = (members.select(mid.alias("__mid"), "__fp")
+                     .join(true_rep, "__fp")
+                     .join(rep_dup, "__trep", "left")
+                     .withColumn("dup_of",
+                                 F.when(F.col("__mid") == F.col("__trep"),
+                                        F.col("__rdup"))
+                                 .otherwise(F.coalesce(F.col("__rdup"),
+                                                       F.col("__trep"))))
+                     .select(F.col("__mid").alias(self.id_col),
+                             F.col("dup_of").isNotNull().alias("is_dup"),
+                             "dup_of", "__fp",
+                             F.col("__trep").alias("rep")))
+        new_fps = (true_rep
+                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
+                   .join(rep_dup, "__trep", "left")
+                   .select("__fp", F.col("__trep").alias("rep"),
+                           F.coalesce(F.col("__rdup"), F.col("__trep"))
+                           .alias("eff")))
+        self._commit_generation(
+            {**signatures, self.fps_dir: new_fps,
+             self.flags_dir: new_flags}, below_epoch, full_fix=True)
+        self._refresh_flags()
 
     # -- generation commit (compaction + reflag share this) ---------------
 
     def _commit_generation(self, frames: dict[str, DataFrame],
-                           new_gen: int, below_epoch: int,
-                           keep_nrep: int = 0,
+                           below_epoch: int, keep_nrep: int = 0,
                            full_fix: bool = False) -> None:
-        """Write one DataFrame per data directory as base generation
-        ``new_gen``, commit via meta.json, then sweep superseded
-        generations and folded epoch partitions.  Write order makes a
-        crash at ANY point harmless: (1) generation directories are
-        fully written, (2) meta.json is fsynced and atomically
-        replaced to point at them, (3) superseded directories are
-        deleted best-effort — orphans from a crash between (1) and
-        (2), or leftovers from a crash during (3), are swept by the
-        next commit.
+        """Commit ``frames`` as the next base generation through
+        :meth:`.epoch_log.EpochLog.commit`, carrying the dedup
+        bookkeeping in the meta file.
 
         ``keep_nrep``: repair deltas still needed after this commit
         (a PARTIAL compact folds only some epochs, but deltas may
@@ -872,13 +818,10 @@ class _EpochStore:
         ``needs_full_reflag``; a plain compact that folds an
         UNREPAIRED late epoch sets it instead — the staleness is now
         baked into the base, beyond any bounded repair."""
-        for path, frame in frames.items():
-            frame.write.mode("overwrite").parquet(
-                self._base_dir(path, new_gen))
-        old = self._meta()
+        old = self.log.meta()
         emm = sorted((int(k), v)
                      for k, v in old.get("emm", {}).items())
-        meta = {"gen": new_gen, "below": below_epoch}
+        meta = {}
         base_max = old.get("base_max")
         keep_emm = {}
         for e, (mn, mx) in emm:
@@ -911,63 +854,24 @@ class _EpochStore:
                 meta["needs_full_reflag"] = True
         if keep_nrep:
             meta["nrep"] = keep_nrep
-        self._write_meta(meta)  # the commit point
-        if not keep_nrep:
-            shutil.rmtree(self._repairs_root(), ignore_errors=True)
-        for path in frames:
-            for g in range(new_gen):
-                shutil.rmtree(self._base_dir(path, g),
-                              ignore_errors=True)
-            if os.path.isdir(path):
-                for d in os.listdir(path):
-                    if d.startswith("epoch="):
-                        try:
-                            e = int(d.split("=", 1)[1])
-                        except ValueError:
-                            continue
-                        if e < below_epoch:
-                            shutil.rmtree(os.path.join(path, d),
-                                          ignore_errors=True)
+        self.log.commit(frames, below_epoch, meta,
+                        drop=() if keep_nrep else (self._repairs_root(),))
 
     def compact(self, below_epoch: int) -> None:
         """Fold every epoch partition < ``below_epoch`` (which must be
         at-or-below the streaming checkpoint's committed watermark —
         replays can then only target epochs this never touches) into
         the next base generation."""
-        meta = self._meta()
-        if below_epoch <= meta["below"]:
-            return  # nothing new to fold
-        # probe ALL paths before writing anything: an early return after
-        # one path's generation dir was written would leave an orphan
-        # gN with meta not advanced (harmless for reads, but the next
-        # compaction would then reuse the gN name)
-        merged = {path: self._stored_view(path, below_epoch)
-                  for path in self._dirs()}
-        missing = [p for p, m in merged.items() if m is None]
-        if len(missing) == len(merged):
-            return  # truly empty store: nothing to fold
-        if missing:
-            # every epoch write covers ALL four dirs (empty frames
-            # still write a schema'd partition), so a partial layout is
-            # either a pre-fps/flags legacy store or corruption — a
-            # silent return here would no-op compaction forever while
-            # small files accumulate
-            raise RuntimeError(
-                f"dedup store at {self.store_dir} has data in some "
-                f"directories but none in {missing}; legacy or corrupt "
-                "layout — refusing to compact")
+        merged = self.log.fold_views(below_epoch, self._stored_view)
+        if merged is None:
+            return
         # repair deltas fold into the base IF this compact covers every
         # live epoch; a partial compact must keep them (they may still
         # override rows in the epochs left live)
-        live_above = any(
-            int(d.split("=", 1)[1]) >= below_epoch
-            for path in self._dirs() if os.path.isdir(path)
-            for d in os.listdir(path)
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit())
         self._commit_generation(
-            merged, meta["gen"] + 1, below_epoch,
-            keep_nrep=self._meta().get("nrep", 0) if live_above else 0)
+            merged, below_epoch,
+            keep_nrep=(self.log.meta().get("nrep", 0)
+                       if self.log.live_above(below_epoch) else 0))
 
     def _assert_quiescent(self, below_epoch: int) -> None:
         """reflag's correctness precondition, enforced: every written
@@ -976,31 +880,24 @@ class _EpochStore:
         inherit wrong dup_of verdicts from the un-rewritten fps).
         ``below_epoch`` also must not scope below a prior compaction's
         watermark: live epoch= dirs below it are gone by then, so the
-        dir scan alone would pass, yet ``_stored`` reads the base
+        dir scan alone would pass, yet the read takes the base
         generation (which holds epochs >= below_epoch) and the commit
         would REGRESS meta['below'] (ADVICE r9)."""
-        floor = self._meta()["below"]
+        floor = self.log.meta()["below"]
         if below_epoch < floor:
             raise RuntimeError(
                 f"reflag(below_epoch={below_epoch}) would scope below "
                 f"the compaction watermark {floor}; the base "
                 f"generation already folds epochs up to {floor} — "
                 f"pass below_epoch>={floor}")
-        for path in self._dirs():
-            if not os.path.isdir(path):
-                continue
-            for d in os.listdir(path):
-                if d.startswith("epoch="):
-                    try:
-                        e = int(d.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if e >= below_epoch:
-                        raise RuntimeError(
-                            f"reflag(below_epoch={below_epoch}) requires "
-                            f"a quiescent store with every epoch below "
-                            f"it, but {path} holds epoch={e}; pass "
-                            f"below_epoch={e + 1} or higher")
+        for path in self.log.dirs:
+            e = max(live_epochs(path), default=None)
+            if e is not None and e >= below_epoch:
+                raise RuntimeError(
+                    f"reflag(below_epoch={below_epoch}) requires "
+                    f"a quiescent store with every epoch below "
+                    f"it, but {path} holds epoch={e}; pass "
+                    f"below_epoch={e + 1} or higher")
 
 
 class BucketedDedupStore(_EpochStore):
@@ -1032,8 +929,8 @@ class BucketedDedupStore(_EpochStore):
         self.id_col, self.text_col = id_col, text_col
         self.threshold, self.ngram = threshold, ngram
         self.n_hashes, self.bands = n_hashes, bands
-        self.meta_path = os.path.join(store_dir, "meta.json")
-        self.params_path = os.path.join(store_dir, "params.json")
+        self._open_log((self.buckets_dir, self.toks_dir, self.fps_dir,
+                        self.flags_dir), "meta.json", "params.json")
         # test-only convenience: False (the default) keeps driver
         # memory O(1) in corpus size — production reads all_flags()
         self.track_flags = track_flags
@@ -1048,20 +945,6 @@ class BucketedDedupStore(_EpochStore):
     def _signature_params(self) -> dict:
         return {"threshold": self.threshold, "ngram": self.ngram,
                 "n_hashes": self.n_hashes, "bands": self.bands}
-
-    def _dirs(self) -> tuple[str, ...]:
-        return (self.buckets_dir, self.toks_dir, self.fps_dir,
-                self.flags_dir)
-
-    def all_flags(self) -> DataFrame | None:
-        """Every persisted per-document verdict —
-        (id, is_dup, dup_of) — from the compacted base plus all live
-        epochs.  The production read path (``self.flags`` is test-only
-        driver state)."""
-        stored = self._stored_view(self.flags_dir, 2**62)
-        if stored is None:
-            return None
-        return stored.select(self.id_col, "is_dup", "dup_of")
 
     def _capped(self, buckets: DataFrame) -> DataFrame:
         """Rank-cap a (id, band, key) frame per bucket at the
@@ -1093,22 +976,11 @@ class BucketedDedupStore(_EpochStore):
                       epoch_id: int) -> DataFrame:
         """Flag one epoch's batch against the store, (re)write its
         epoch partitions, return (id, is_dup, dup_of)."""
-        self._check_params()
+        self._pin()
         new = new_docs.select(F.col(self.id_col).alias("__nid"),
                               F.col(self.text_col).alias("__ntext"))
         fp_rows = self._fingerprinted(new).localCheckpoint(eager=True)
-        group_rep = (fp_rows.groupBy("__fp")
-                     .agg(F.min("__nid").alias("__brep")))
-        stored_fp = self._stored_view(self.fps_dir, epoch_id)
-        if stored_fp is not None:
-            group_rep = group_rep.join(stored_fp, "__fp", "left")
-        else:
-            id_type = dict(new.dtypes)["__nid"]
-            group_rep = (group_rep
-                         .withColumn("rep",
-                                     F.lit(None).cast(id_type))
-                         .withColumn("eff", F.lit(None).cast(id_type)))
-        group_rep = group_rep.localCheckpoint(eager=True)
+        group_rep = self._group_reps(fp_rows, "__nid", epoch_id)
 
         # groups whose fingerprint is NEW sign + join; the batch rep
         # carries the group through LSH
@@ -1152,34 +1024,8 @@ class BucketedDedupStore(_EpochStore):
         rep_dup = (pairs.groupBy(F.col("id_b").alias("__brep"))
                    .agg(F.min("id_a").alias("__rdup")))
 
-        # verdicts: new-fp group members propagate from the rep's
-        # verdict; known-fp members are dups of the stored effective
-        # original (eff = coalesce(rep's dup_of, rep) at store time)
-        nf = (fp_rows.join(new_groups, "__fp")
-              .join(rep_dup, "__brep", "left")
-              .select("__nid", "__fp",
-                      F.col("__brep").alias("rep"),
-                      F.when(F.col("__nid") == F.col("__brep"),
-                             F.col("__rdup"))
-                      .otherwise(F.coalesce(F.col("__rdup"),
-                                            F.col("__brep")))
-                      .alias("dup_of")))
-        kf = (fp_rows
-              .join(group_rep.filter(F.col("rep").isNotNull())
-                    .select("__fp", "rep", "eff"), "__fp")
-              .select("__nid", "__fp", "rep",
-                      F.col("eff").alias("dup_of")))
-        flags = (nf.unionByName(kf)
-                 .select(F.col("__nid").alias(self.id_col),
-                         F.col("dup_of").isNotNull().alias("is_dup"),
-                         "dup_of", "__fp", "rep")
-                 .localCheckpoint(eager=True))
-
-        new_fps = (new_groups.join(rep_dup, "__brep", "left")
-                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
-                   .select("__fp", F.col("__brep").alias("rep"),
-                           F.coalesce(F.col("__rdup"), F.col("__brep"))
-                           .alias("eff")))
+        flags, new_fps = self._verdicts(fp_rows, group_rep, new_groups,
+                                        rep_dup, "__nid")
 
         # idempotent (re)write of THIS epoch's partitions, then release
         # the batch-sized checkpoint blocks eagerly — a long-running
@@ -1188,8 +1034,7 @@ class BucketedDedupStore(_EpochStore):
                             (new_toks, self.toks_dir),
                             (new_fps, self.fps_dir),
                             (flags, self.flags_dir)):
-            frame.write.mode("overwrite").parquet(
-                os.path.join(path, f"epoch={epoch_id}"))
+            frame.write.mode("overwrite").parquet(epoch_dir(path, epoch_id))
         self._record_epoch_minmax(fp_rows, "__nid", epoch_id)
         # the public 3-column verdicts get their OWN checkpoint (reading
         # from the 5-column one, so it's a cheap re-materialization):
@@ -1201,13 +1046,6 @@ class BucketedDedupStore(_EpochStore):
                    flags):
             release_checkpoint(ck)
         return out
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        flags = self.process_batch(batch_df, epoch_id)
-        if self.track_flags:
-            for r in flags.collect():
-                self.flags[r[self.id_col]] = (r["is_dup"], r["dup_of"])
-        release_checkpoint(flags)
 
     # -- out-of-order repair ----------------------------------------------
 
@@ -1233,7 +1071,7 @@ class BucketedDedupStore(_EpochStore):
         stored docs (measured at two store sizes in docs/SCALING.md)
         — schedule it like compaction, amortized across many ingested
         batches, never per-batch."""
-        self._check_params()  # a mismatched session must not rewrite history
+        self._pin()  # a mismatched session must not rewrite history
         self._assert_quiescent(below_epoch)
         members = self._stored_view(self.flags_dir, below_epoch)
         if members is None:
@@ -1266,31 +1104,9 @@ class BucketedDedupStore(_EpochStore):
         pairs = verify_jaccard(rtoks, candidates, self.threshold)
         rep_dup = (pairs.groupBy(F.col("id_b").alias("__trep"))
                    .agg(F.min("id_a").alias("__rdup")))
-        new_flags = (members.select(mid.alias("__mid"), "__fp")
-                     .join(true_rep, "__fp")
-                     .join(rep_dup, "__trep", "left")
-                     .withColumn("dup_of",
-                                 F.when(F.col("__mid") == F.col("__trep"),
-                                        F.col("__rdup"))
-                                 .otherwise(F.coalesce(F.col("__rdup"),
-                                                       F.col("__trep"))))
-                     .select(F.col("__mid").alias(self.id_col),
-                             F.col("dup_of").isNotNull().alias("is_dup"),
-                             "dup_of", "__fp",
-                             F.col("__trep").alias("rep")))
-        new_fps = (true_rep
-                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
-                   .join(rep_dup, "__trep", "left")
-                   .select("__fp", F.col("__trep").alias("rep"),
-                           F.coalesce(F.col("__rdup"), F.col("__trep"))
-                           .alias("eff")))
-        self._commit_generation(
-            {self.buckets_dir: rbuckets, self.toks_dir: rtoks,
-             self.fps_dir: new_fps, self.flags_dir: new_flags},
-            self._meta()["gen"] + 1, below_epoch, full_fix=True)
-        if self.track_flags:
-            self.flags = {r[self.id_col]: (r["is_dup"], r["dup_of"])
-                          for r in self.all_flags().collect()}
+        self._commit_reflag(members, true_rep, rep_dup,
+                            {self.buckets_dir: rbuckets,
+                             self.toks_dir: rtoks}, below_epoch)
 
     # -- bounded out-of-order repair ---------------------------------------
 
@@ -1547,8 +1363,8 @@ class EmbeddingDedupStore(_EpochStore):
         self.threshold = threshold
         self.dim, self.n_bits = dim, n_bits
         self.n_tables, self.seed0 = n_tables, seed0
-        self.meta_path = os.path.join(store_dir, "emeta.json")
-        self.params_path = os.path.join(store_dir, "eparams.json")
+        self._open_log((self.buckets_dir, self.vecs_dir, self.fps_dir,
+                        self.flags_dir), "emeta.json", "eparams.json")
         # test-only convenience (see the text twin): the default keeps
         # driver memory O(1); production reads all_flags()
         self.track_flags = track_flags
@@ -1559,16 +1375,6 @@ class EmbeddingDedupStore(_EpochStore):
         return {"threshold": self.threshold, "dim": self.dim,
                 "n_bits": self.n_bits, "n_tables": self.n_tables,
                 "seed0": self.seed0}
-
-    def _dirs(self) -> tuple[str, ...]:
-        return (self.buckets_dir, self.vecs_dir, self.fps_dir,
-                self.flags_dir)
-
-    def all_flags(self) -> DataFrame | None:
-        stored = self._stored_view(self.flags_dir, 2**62)
-        if stored is None:
-            return None
-        return stored.select(self.id_col, "is_dup", "dup_of")
 
     def _bucketed(self, vecs: DataFrame) -> DataFrame:
         from axonops_schema_registry_spark.llm.similarity import (
@@ -1597,21 +1403,11 @@ class EmbeddingDedupStore(_EpochStore):
 
     def process_batch(self, new_vecs: DataFrame,
                       epoch_id: int) -> DataFrame:
-        self._check_params()
+        self._pin()
         new = new_vecs.select(F.col(self.id_col).alias("__id"),
                               F.col(self.vec_col).alias("__v"))
         fp_rows = self._fingerprinted(new).localCheckpoint(eager=True)
-        group_rep = (fp_rows.groupBy("__fp")
-                     .agg(F.min("__id").alias("__brep")))
-        stored_fp = self._stored_view(self.fps_dir, epoch_id)
-        if stored_fp is not None:
-            group_rep = group_rep.join(stored_fp, "__fp", "left")
-        else:
-            id_type = dict(new.dtypes)["__id"]
-            group_rep = (group_rep
-                         .withColumn("rep", F.lit(None).cast(id_type))
-                         .withColumn("eff", F.lit(None).cast(id_type)))
-        group_rep = group_rep.localCheckpoint(eager=True)
+        group_rep = self._group_reps(fp_rows, "__id", epoch_id)
 
         new_groups = (group_rep.filter(F.col("rep").isNull())
                       .select("__fp", "__brep"))
@@ -1634,36 +1430,14 @@ class EmbeddingDedupStore(_EpochStore):
         rep_dup = (pairs.groupBy(F.col("id_b").alias("__brep"))
                    .agg(F.min("id_a").alias("__rdup")))
 
-        nf = (fp_rows.join(new_groups, "__fp")
-              .join(rep_dup, "__brep", "left")
-              .select("__id", "__fp", F.col("__brep").alias("rep"),
-                      F.when(F.col("__id") == F.col("__brep"),
-                             F.col("__rdup"))
-                      .otherwise(F.coalesce(F.col("__rdup"),
-                                            F.col("__brep")))
-                      .alias("dup_of")))
-        kf = (fp_rows
-              .join(group_rep.filter(F.col("rep").isNotNull())
-                    .select("__fp", "rep", "eff"), "__fp")
-              .select("__id", "__fp", "rep",
-                      F.col("eff").alias("dup_of")))
-        flags = (nf.unionByName(kf)
-                 .select(F.col("__id").alias(self.id_col),
-                         F.col("dup_of").isNotNull().alias("is_dup"),
-                         "dup_of", "__fp", "rep")
-                 .localCheckpoint(eager=True))
-        new_fps = (new_groups.join(rep_dup, "__brep", "left")
-                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
-                   .select("__fp", F.col("__brep").alias("rep"),
-                           F.coalesce(F.col("__rdup"), F.col("__brep"))
-                           .alias("eff")))
+        flags, new_fps = self._verdicts(fp_rows, group_rep, new_groups,
+                                        rep_dup, "__id")
 
         for frame, path in ((new_buckets, self.buckets_dir),
                             (rep_vecs, self.vecs_dir),
                             (new_fps, self.fps_dir),
                             (flags, self.flags_dir)):
-            frame.write.mode("overwrite").parquet(
-                os.path.join(path, f"epoch={epoch_id}"))
+            frame.write.mode("overwrite").parquet(epoch_dir(path, epoch_id))
         self._record_epoch_minmax(fp_rows, "__id", epoch_id)
         out = (flags.select(self.id_col, "is_dup", "dup_of")
                .localCheckpoint(eager=True))
@@ -1671,13 +1445,6 @@ class EmbeddingDedupStore(_EpochStore):
                    pairs):
             release_checkpoint(ck)
         return out
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        flags = self.process_batch(batch_df, epoch_id)
-        if self.track_flags:
-            for r in flags.collect():
-                self.flags[r[self.id_col]] = (r["is_dup"], r["dup_of"])
-        release_checkpoint(flags)
 
     def reflag(self, below_epoch: int) -> None:
         """Global first-wins repair after out-of-order ingestion — the
@@ -1687,7 +1454,7 @@ class EmbeddingDedupStore(_EpochStore):
         symmetric rep-level cosine first-wins, propagate to members,
         and commit everything as the next base generation.  Quiescence
         (every written epoch below ``below_epoch``) is enforced."""
-        self._check_params()  # a mismatched session must not rewrite history
+        self._pin()  # a mismatched session must not rewrite history
         self._assert_quiescent(below_epoch)
         members = self._stored_view(self.flags_dir, below_epoch)
         if members is None:
@@ -1713,32 +1480,10 @@ class EmbeddingDedupStore(_EpochStore):
                                 max_bucket=self.max_bucket)
         rep_dup = (pairs.groupBy(F.col("id_b").alias("__trep"))
                    .agg(F.min("id_a").alias("__rdup")))
-        new_flags = (members.select(mid.alias("__mid"), "__fp")
-                     .join(true_rep, "__fp")
-                     .join(rep_dup, "__trep", "left")
-                     .withColumn("dup_of",
-                                 F.when(F.col("__mid") == F.col("__trep"),
-                                        F.col("__rdup"))
-                                 .otherwise(F.coalesce(F.col("__rdup"),
-                                                       F.col("__trep"))))
-                     .select(F.col("__mid").alias(self.id_col),
-                             F.col("dup_of").isNotNull().alias("is_dup"),
-                             "dup_of", "__fp",
-                             F.col("__trep").alias("rep")))
-        new_fps = (true_rep
-                   .filter(~F.col("__fp").startswith(_NOSHINGLE))
-                   .join(rep_dup, "__trep", "left")
-                   .select("__fp", F.col("__trep").alias("rep"),
-                           F.coalesce(F.col("__rdup"), F.col("__trep"))
-                           .alias("eff")))
-        self._commit_generation(
-            {self.buckets_dir: rbuckets, self.vecs_dir: rvecs,
-             self.fps_dir: new_fps, self.flags_dir: new_flags},
-            self._meta()["gen"] + 1, below_epoch, full_fix=True)
+        self._commit_reflag(members, true_rep, rep_dup,
+                            {self.buckets_dir: rbuckets,
+                             self.vecs_dir: rvecs}, below_epoch)
         release_checkpoint(pairs)
-        if self.track_flags:
-            self.flags = {r[self.id_col]: (r["is_dup"], r["dup_of"])
-                          for r in self.all_flags().collect()}
 
     _key_cols = ("table", "bucket")
 
@@ -1866,11 +1611,9 @@ class LineDedupStore:
     blocks table is the price of repairability.  :meth:`compact` folds
     epoch partitions below the streaming checkpoint's committed
     watermark (plus, when the store is quiescent, the repair overlays)
-    into a generation-numbered base per directory — the _EpochStore
-    pattern, with the same crash-safe commit order (bases fully
-    written, then one atomic ``line_meta.json`` swap, then best-effort
-    sweep) — so neither the epoch-partition count nor the
-    ``all_results`` overlay-join chain grows without bound."""
+    into a generation-numbered base per directory through
+    :class:`.epoch_log.EpochLog` — so neither the epoch-partition count
+    nor the ``all_results`` overlay-join chain grows without bound."""
 
     def __init__(self, spark: SparkSession, store_dir: str,
                  id_col: str = "doc_id", text_col: str = "text",
@@ -1886,11 +1629,14 @@ class LineDedupStore:
         self.elections_dir = os.path.join(store_dir, "elections")
         self.results_dir = os.path.join(store_dir, "results")
         self.repairs_dir = os.path.join(store_dir, "line_repairs")
-        self.meta_path = os.path.join(store_dir, "line_meta.json")
-        self.params_path = os.path.join(store_dir, "line_params.json")
+        # bases keep the epoch column: repair()'s arrival-owner
+        # detection (min_by __first, epoch) needs it back
+        self.log = EpochLog(
+            spark, store_dir,
+            (self.blocks_dir, self.elections_dir, self.results_dir),
+            "line_meta.json", "line_params.json",
+            label="line-dedup-store", keep_epoch=True)
         os.makedirs(store_dir, exist_ok=True)
-
-    # -- signature-parameter pinning (the _EpochStore discipline) ---------
 
     def _signature_params(self) -> dict:
         """The parameters that define this store's on-disk signature
@@ -1899,103 +1645,11 @@ class LineDedupStore:
         column mapping would segment new batches incompatibly with the
         stored blocks/elections — every election lookup would miss and
         the store would silently stop deduplicating against the prior
-        corpus (the same failure mode _EpochStore._check_params
-        documents; this store gained the pin in r16)."""
+        corpus (this store gained the pin in r16)."""
         return {"block_words": self.block_words,
                 "min_block_words": self.min_block_words,
                 "hash_blocks": self.hash_blocks,
                 "id_col": self.id_col, "text_col": self.text_col}
-
-    def _check_params(self) -> None:
-        """Pin on first ingest; fail loudly on later mismatch, corrupt
-        pin, or a non-empty legacy store with no pin (auto-pinning this
-        session's values over unknown creation-time values would bless
-        exactly the mismatch the pin exists to prevent)."""
-        want = self._signature_params()
-        try:
-            with open(self.params_path) as f:
-                have = json.load(f)
-        except FileNotFoundError:
-            has_data = os.path.exists(self.meta_path) or any(
-                os.path.isdir(d) and os.listdir(d)
-                for base in (self.blocks_dir, self.elections_dir,
-                             self.results_dir)
-                for d in (base, base + "_base"))
-            if has_data:
-                raise RuntimeError(
-                    f"line-dedup store at {self.store_dir} holds data "
-                    f"but no signature-parameter pin "
-                    f"({self.params_path} missing) — a pre-pinning "
-                    "legacy store; refusing to auto-pin this session's "
-                    "parameters over unknown creation-time values.  "
-                    "Migrate once by writing the ORIGINAL creation "
-                    f"parameters ({sorted(want)}) to that file, then "
-                    "reopen.")
-            _write_json_atomic(self.params_path, want)
-            return
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt line-dedup-store params at "
-                f"{self.params_path}: {exc!r}; refusing to ingest with "
-                "unverifiable signature parameters") from exc
-        if have != want:
-            diff = {k: (have.get(k), want.get(k))
-                    for k in sorted(set(have) | set(want))
-                    if have.get(k) != want.get(k)}
-            raise RuntimeError(
-                f"line-dedup store at {self.store_dir} was created "
-                f"with different signature parameters (stored vs this "
-                f"session): {diff}; matching elections require "
-                "identical parameters — reopen with the stored values "
-                "or build a new store")
-
-    # -- generation bookkeeping (the _EpochStore pattern) -----------------
-
-    def _meta(self) -> dict:
-        """{"gen": current base generation or -1, "below": first
-        non-compacted epoch}.  Only a MISSING file means "no
-        compaction yet"; present-but-unreadable is corruption and
-        fails loudly (the _EpochStore._meta contract — compaction
-        already deleted the folded epoch dirs)."""
-        try:
-            with open(self.meta_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"gen": -1, "below": 0}
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt line-dedup-store meta at {self.meta_path}: "
-                f"{exc!r}; refusing to silently drop compacted state"
-            ) from exc
-
-    def _read_dir(self, path: str, before_epoch: int) -> DataFrame | None:
-        """Base generation + live epoch partitions in
-        [meta.below, before_epoch), EPOCH COLUMN RETAINED — unlike the
-        shared :func:`_read_epochs`, because :meth:`repair`'s
-        arrival-owner detection (min_by __first, epoch) needs the
-        epoch back; callers that don't, drop it."""
-        meta = self._meta()
-        parts = []
-        if meta["gen"] >= 0:
-            base = os.path.join(path + "_base", f"g{meta['gen']}")
-            if not os.path.isdir(base):
-                # meta is the commit record: a base it points at that
-                # is missing on disk is corruption, not "no prior state"
-                raise RuntimeError(
-                    f"line-dedup-store meta {self.meta_path} references "
-                    f"missing base generation {base}")
-            parts.append(self.spark.read.parquet(base))
-        if (os.path.isdir(path)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(path))):
-            parts.append(self.spark.read.parquet(path)
-                         .filter(F.col("epoch") >= meta["below"]))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.filter(F.col("epoch") < before_epoch)
 
     # -- shared segmentation ----------------------------------------------
 
@@ -2028,19 +1682,13 @@ class LineDedupStore:
             _reassemble_blocks,
         )
 
-        self._check_params()
-        below = self._meta()["below"]  # one read per batch (ADVICE r16)
-        if epoch_id < below:
-            raise RuntimeError(
-                f"epoch {epoch_id} is below the compaction watermark "
-                f"{below}; compact() must only fold "
-                "epochs the streaming checkpoint can no longer replay")
+        self.log.pin(self._signature_params())
+        self.log.assert_live(epoch_id)
         ex = self._segmented(new_docs).localCheckpoint(eager=True)
         batch_el = (ex.filter(self._eligible())
                     .groupBy("__bkey")
                     .agg(F.min("__ord").alias("__first")))
-        stored = self._read_dir(self.elections_dir,
-                                before_epoch=epoch_id)
+        stored = self.log.read(self.elections_dir, epoch_id)
         flagged = ex.join(batch_el, "__bkey", "left")
         if stored is not None:
             seen = (stored.select("__bkey").distinct()
@@ -2062,13 +1710,11 @@ class LineDedupStore:
         # invalidate the repaired-through record, or a replay with
         # different data would let repair() serve a stale cached
         # result off an unchanged signature.
-        rewrite = os.path.isdir(
-            os.path.join(self.elections_dir, f"epoch={epoch_id}"))
+        rewrite = os.path.isdir(epoch_dir(self.elections_dir, epoch_id))
         for frame, path in ((ex, self.blocks_dir),
                             (batch_el, self.elections_dir),
                             (out, self.results_dir)):
-            frame.write.mode("overwrite").parquet(
-                os.path.join(path, f"epoch={epoch_id}"))
+            frame.write.mode("overwrite").parquet(epoch_dir(path, epoch_id))
         if rewrite:
             try:
                 os.remove(os.path.join(self.store_dir,
@@ -2096,7 +1742,7 @@ class LineDedupStore:
     def all_results(self) -> DataFrame | None:
         """Every stored cleaned document with repair overlays applied
         latest-wins: (id, n_blocks, n_removed, cleaned_text)."""
-        base = self._read_dir(self.results_dir, before_epoch=1 << 62)
+        base = self.log.read(self.results_dir)
         if base is None:
             return None
         cols = ["id", "n_blocks", "n_removed", "cleaned_text"]
@@ -2120,15 +1766,9 @@ class LineDedupStore:
         ``line_repair.json`` lets the expensive full-overlay equality
         scan be skipped.  Any ingest (new epoch), compact (gen bump /
         watermark move) or overlay write changes the signature."""
-        meta = self._meta()
-        epochs = sorted(
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(self.elections_dir)
-                      if os.path.isdir(self.elections_dir) else [])
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit())
+        meta = self.log.meta()
         return {"gen": meta["gen"], "below": meta["below"],
-                "epochs": epochs,
+                "epochs": live_epochs(self.elections_dir),
                 "n_overlays": len(self._repair_dirs())}
 
     def repair(self) -> int:
@@ -2170,7 +1810,7 @@ class LineDedupStore:
         except (OSError, ValueError, KeyError, TypeError):
             pass  # missing/corrupt record: fall through to the full path
 
-        el = self._read_dir(self.elections_dir, before_epoch=1 << 62)
+        el = self.log.read(self.elections_dir)
         if el is None:
             return 0
         per_key = (el.groupBy("__bkey")
@@ -2196,7 +1836,7 @@ class LineDedupStore:
             _write_json_atomic(sig_path, {"sig": sig, "n": 0})
             return 0
         gwin = el.groupBy("__bkey").agg(F.min("__first").alias("__gw"))
-        blocks = self._read_dir(self.blocks_dir, before_epoch=1 << 62)
+        blocks = self.log.read(self.blocks_dir)
         mine = blocks.join(F.broadcast(affected), "id")
         corrected = _reassemble_blocks(
             mine.join(gwin, "__bkey", "left")
@@ -2246,37 +1886,12 @@ class LineDedupStore:
         ``below_epoch`` must be at-or-below the streaming checkpoint's
         committed watermark: replays can then only target epochs this
         never touches (enforced on the ingest side by the
-        ``process_batch`` watermark guard).  Crash-safe in the
-        _EpochStore commit order: (1) base generations fully written,
-        (2) one atomic ``line_meta.json`` swap — the commit point —
-        (3) superseded directories swept best-effort; orphans from a
-        crash between (1) and (2) are overwritten by the next compact,
-        and a crash during (3) leaves directories the readers already
-        ignore."""
-        meta = self._meta()
-        if below_epoch <= meta["below"]:
-            return  # nothing new to fold
-        dirs = (self.blocks_dir, self.elections_dir, self.results_dir)
-        merged = {p: self._read_dir(p, below_epoch) for p in dirs}
-        missing = [p for p, m in merged.items() if m is None]
-        if len(missing) == len(merged):
-            return  # truly empty store: nothing to fold
-        if missing:
-            # every epoch write covers all three dirs, so a partial
-            # layout is corruption — a silent return would no-op
-            # compaction forever while small files accumulate
-            raise RuntimeError(
-                f"line-dedup store at {self.store_dir} has data in "
-                f"some directories but none in {missing}; corrupt "
-                "layout — refusing to compact")
-        live_above = any(
-            int(d.split("=", 1)[1]) >= below_epoch
-            for p in dirs if os.path.isdir(p)
-            for d in os.listdir(p)
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit())
+        ``process_batch`` watermark guard)."""
+        merged = self.log.fold_views(below_epoch)
+        if merged is None:
+            return
         reps = self._repair_dirs()
-        fold_reps = bool(reps) and not live_above
+        fold_reps = bool(reps) and not self.log.live_above(below_epoch)
         if fold_reps:
             res = merged[self.results_dir]
             cols = ["id", "n_blocks", "n_removed", "cleaned_text"]
@@ -2288,26 +1903,5 @@ class LineDedupStore:
                 replaced = res.select("id", "epoch").join(delta, "id")
                 res = kept.unionByName(replaced.select(*kept.columns))
             merged[self.results_dir] = res
-        new_gen = meta["gen"] + 1
-        for path, frame in merged.items():
-            frame.write.mode("overwrite").parquet(
-                os.path.join(path + "_base", f"g{new_gen}"))
-        _write_json_atomic(self.meta_path,
-                           {"gen": new_gen, "below": below_epoch})
-        if fold_reps:
-            shutil.rmtree(self.repairs_dir, ignore_errors=True)
-        for path in merged:
-            for g in range(new_gen):
-                shutil.rmtree(os.path.join(path + "_base", f"g{g}"),
-                              ignore_errors=True)
-            if os.path.isdir(path):
-                for d in os.listdir(path):
-                    if not d.startswith("epoch="):
-                        continue
-                    try:
-                        e = int(d.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if e < below_epoch:
-                        shutil.rmtree(os.path.join(path, d),
-                                      ignore_errors=True)
+        self.log.commit(merged, below_epoch,
+                        drop=(self.repairs_dir,) if fold_reps else ())

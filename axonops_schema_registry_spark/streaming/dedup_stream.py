@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.llm.dedup import incremental_dedup_flags
 from axonops_schema_registry_spark.operators.core import release_checkpoint
+from axonops_schema_registry_spark.streaming.epoch_log import (
+    EpochLog,
+    epoch_dir,
+    live_epochs,
+)
 
 
 class IncrementalDedupSink:
@@ -67,10 +72,7 @@ class IncrementalDedupSink:
 
     def all_flags(self, spark) -> DataFrame | None:
         """Every persisted verdict (requires ``flags_dir``)."""
-        if self.flags_dir is None or not (
-                os.path.isdir(self.flags_dir)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(self.flags_dir))):
+        if self.flags_dir is None or not live_epochs(self.flags_dir):
             return None
         return (spark.read.parquet(self.flags_dir)
                 .select(self.id_col, "is_dup", "dup_of"))
@@ -86,7 +88,7 @@ class IncrementalDedupSink:
         if self.flags_dir is not None:
             # overwrite keeps an at-least-once replay idempotent
             batch_flags.write.mode("overwrite").parquet(
-                os.path.join(self.flags_dir, f"epoch={epoch_id}"))
+                epoch_dir(self.flags_dir, epoch_id))
         if self.track_flags:
             for r in batch_flags.collect():
                 self.flags[r[self.id_col]] = (r["is_dup"], r["dup_of"])
@@ -200,10 +202,7 @@ class CurationSink:
 
     def all_results(self, spark) -> DataFrame | None:
         """Every persisted curation verdict (requires ``results_dir``)."""
-        if self.results_dir is None or not (
-                os.path.isdir(self.results_dir)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(self.results_dir))):
+        if self.results_dir is None or not live_epochs(self.results_dir):
             return None
         cols = [self.id_col, "is_dup", "dup_of", "n_eval_spans"]
         if self.quality_weights is not None:
@@ -274,7 +273,7 @@ class CurationSink:
             # overwrite keeps an at-least-once replay idempotent
             (verdicts.select(*out_cols, "clean_text")
              .write.mode("overwrite").parquet(
-                 os.path.join(self.results_dir, f"epoch={epoch_id}")))
+                 epoch_dir(self.results_dir, epoch_id)))
         if self.track_results:
             for r in verdicts.collect():
                 rec = {
@@ -347,10 +346,7 @@ class LineDedupSink:
 
     def all_results(self, spark) -> DataFrame | None:
         """Every persisted cleaned document (requires results_dir)."""
-        if self.results_dir is None or not (
-                os.path.isdir(self.results_dir)
-                and any(d.startswith("epoch=")
-                        for d in os.listdir(self.results_dir))):
+        if self.results_dir is None or not live_epochs(self.results_dir):
             return None
         return (spark.read.parquet(self.results_dir)
                 .select("id", "n_blocks", "n_removed", "cleaned_text"))
@@ -394,7 +390,7 @@ class LineDedupSink:
         if self.results_dir is not None:
             # overwrite keeps an at-least-once replay idempotent
             out.write.mode("overwrite").parquet(
-                os.path.join(self.results_dir, f"epoch={epoch_id}"))
+                epoch_dir(self.results_dir, epoch_id))
         if self.track_results:
             for r in out.collect():
                 self.results[r["id"]] = (r["n_blocks"], r["n_removed"],
@@ -461,11 +457,10 @@ class TokenBudgetAdmissionSink:
 
     :meth:`compact` folds state deltas and admissions below the
     streaming checkpoint's committed watermark into a
-    generation-numbered base per directory (the _EpochStore pattern:
-    bases fully written, one atomic ``admission_meta.json`` swap,
-    best-effort sweep) — so neither the per-batch prior-state
-    re-aggregation nor the small-file count grows with stream
-    lifetime (ADVICE r16).
+    generation-numbered base per directory through
+    :class:`.epoch_log.EpochLog` — so neither the per-batch
+    prior-state re-aggregation nor the small-file count grows with
+    stream lifetime (ADVICE r16).
 
     Scale shape: one sources-sized broadcast state join + budgets
     broadcast; per-batch cost is one (rank, running-sum) window per
@@ -482,44 +477,19 @@ class TokenBudgetAdmissionSink:
         self.admissions_dir = os.path.join(store_dir, "admissions")
         self.state_dir = os.path.join(store_dir, "budget_state")
         self.budgets_dir = os.path.join(store_dir, "budgets")
-        self.meta_path = os.path.join(store_dir, "admission_meta.json")
-        self.params_path = os.path.join(store_dir,
-                                        "admission_params.json")
+        self.log = EpochLog(
+            budgets.sparkSession, store_dir,
+            (self.state_dir, self.admissions_dir),
+            "admission_meta.json", "admission_params.json",
+            label="admission-store")
         os.makedirs(store_dir, exist_ok=True)
-        self._check_params()
+        # column-mapping pin: a store reopened with different
+        # id/text/source columns would compute token counts and
+        # prefixes over different data while appearing to continue
+        # the same run
+        self.log.pin({"id_col": id_col, "text_col": text_col,
+                      "source_col": source_col})
         self._pin_budgets(budgets.select(source_col, "token_budget"))
-
-    # -- signature pinning -------------------------------------------------
-
-    def _check_params(self) -> None:
-        """Column-mapping pin (the LineDedupStore discipline): a store
-        reopened with different id/text/source columns would compute
-        token counts and prefixes over different data while appearing
-        to continue the same run."""
-        import json as _json
-
-        from axonops_schema_registry_spark.streaming.dedup_store import (
-            _write_json_atomic,
-        )
-
-        want = {"id_col": self.id_col, "text_col": self.text_col,
-                "source_col": self.source_col}
-        try:
-            with open(self.params_path) as f:
-                have = _json.load(f)
-        except FileNotFoundError:
-            _write_json_atomic(self.params_path, want)
-            return
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt admission-store params at {self.params_path}: "
-                f"{exc!r}") from exc
-        if have != want:
-            raise RuntimeError(
-                f"admission store at {self.store_dir} was created with "
-                f"different columns (stored {have} vs this session "
-                f"{want}); reopen with the stored mapping or build a "
-                "new store")
 
     @staticmethod
     def _tables_differ(a: DataFrame, b: DataFrame) -> bool:
@@ -551,13 +521,8 @@ class TokenBudgetAdmissionSink:
         partitions BELOW ``below``; taking max(live) alone would then
         under-report and let update_budgets revise an already-folded
         epoch's as-of view)."""
-        meta = self._meta()
-        live = [int(d.split("=", 1)[1])
-                for d in (os.listdir(self.state_dir)
-                          if os.path.isdir(self.state_dir) else [])
-                if d.startswith("epoch=")
-                and d.split("=", 1)[1].lstrip("-").isdigit()]
-        cands = live + ([meta["below"] - 1] if meta["below"] > 0 else [])
+        below = self.log.meta()["below"]
+        cands = live_epochs(self.state_dir) + ([below - 1] if below else [])
         return max(cands) if cands else None
 
     def update_budgets(self, new_budgets: DataFrame,
@@ -610,103 +575,27 @@ class TokenBudgetAdmissionSink:
 
     # -- compaction (ADVICE r16) --------------------------------------------
 
-    def _meta(self) -> dict:
-        import json as _json
-
-        try:
-            with open(self.meta_path) as f:
-                return _json.load(f)
-        except FileNotFoundError:
-            return {"gen": -1, "below": 0}
-        except (OSError, ValueError) as exc:
-            raise RuntimeError(
-                f"corrupt admission-store meta at {self.meta_path}: "
-                f"{exc!r}; refusing to silently drop compacted state"
-            ) from exc
-
-    def _read_dir(self, spark, path: str,
-                  before_epoch: int) -> DataFrame | None:
-        """Base generation + live epochs in [meta.below, before_epoch),
-        epoch column dropped (neither consumer needs it back)."""
-        from axonops_schema_registry_spark.streaming.dedup_store import (
-            _read_epochs,
-        )
-
-        meta = self._meta()
-        parts = []
-        if meta["gen"] >= 0:
-            base = os.path.join(path + "_base", f"g{meta['gen']}")
-            if not os.path.isdir(base):
-                raise RuntimeError(
-                    f"admission-store meta {self.meta_path} references "
-                    f"missing base generation {base}")
-            parts.append(spark.read.parquet(base))
-        live = _read_epochs(spark, path, before_epoch,
-                            from_epoch=meta["below"])
-        if live is not None:
-            parts.append(live)
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
     def compact(self, spark, below_epoch: int) -> None:
         """Fold state-delta and admission epochs < ``below_epoch``
         (which must be at-or-below the streaming checkpoint's committed
         watermark — enforced on the ingest side by the ``__call__``
         guard) into the next generation base.  State deltas fold to
         one (n_seen, nt_seen) row per source; admissions fold
-        row-preserving.  Crash-safe in the _EpochStore commit order."""
-        import shutil as _shutil
-
-        from axonops_schema_registry_spark.streaming.dedup_store import (
-            _write_json_atomic,
-        )
-
-        meta = self._meta()
-        if below_epoch <= meta["below"]:
-            return  # nothing new to fold
-        state = self._read_dir(spark, self.state_dir, below_epoch)
-        adm = self._read_dir(spark, self.admissions_dir, below_epoch)
-        if state is None and adm is None:
-            return  # truly empty store
-        if (state is None) != (adm is None):
-            raise RuntimeError(
-                f"admission store at {self.store_dir} has data in only "
-                "one of state/admissions; corrupt layout — refusing "
-                "to compact")
-        new_gen = meta["gen"] + 1
-        folded_state = (state.groupBy(self.source_col)
+        row-preserving."""
+        views = self.log.fold_views(below_epoch)
+        if views is None:
+            return
+        folded_state = (views[self.state_dir].groupBy(self.source_col)
                         .agg(F.sum("n_seen").alias("n_seen"),
                              F.sum("nt_seen").alias("nt_seen")))
-        folded_state.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir + "_base", f"g{new_gen}"))
-        adm.write.mode("overwrite").parquet(
-            os.path.join(self.admissions_dir + "_base", f"g{new_gen}"))
-        _write_json_atomic(self.meta_path,
-                           {"gen": new_gen, "below": below_epoch})
-        for path in (self.state_dir, self.admissions_dir):
-            for g in range(new_gen):
-                _shutil.rmtree(os.path.join(path + "_base", f"g{g}"),
-                               ignore_errors=True)
-            if os.path.isdir(path):
-                for d in os.listdir(path):
-                    if not d.startswith("epoch="):
-                        continue
-                    try:
-                        e = int(d.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if e < below_epoch:
-                        _shutil.rmtree(os.path.join(path, d),
-                                       ignore_errors=True)
+        self.log.commit({self.state_dir: folded_state,
+                         self.admissions_dir: views[self.admissions_dir]},
+                        below_epoch)
 
     # -- reads ----------------------------------------------------------------
 
     def _prior_state(self, spark, before_epoch: int) -> DataFrame | None:
-        deltas = self._read_dir(spark, self.state_dir, before_epoch)
+        deltas = self.log.read(self.state_dir, before_epoch)
         if deltas is None:
             return None
         return (deltas.groupBy(self.source_col)
@@ -716,7 +605,7 @@ class TokenBudgetAdmissionSink:
     def all_admissions(self, spark) -> DataFrame | None:
         """Every admitted document so far:
         (id, source, n_tokens, mix_rank, cum_tokens)."""
-        adm = self._read_dir(spark, self.admissions_dir, 1 << 62)
+        adm = self.log.read(self.admissions_dir)
         if adm is None:
             return None
         return adm.select(self.id_col, self.source_col, "n_tokens",
@@ -730,12 +619,7 @@ class TokenBudgetAdmissionSink:
         )
 
         spark = batch_df.sparkSession
-        below = self._meta()["below"]
-        if int(epoch_id) < below:
-            raise RuntimeError(
-                f"epoch {epoch_id} is below the compaction watermark "
-                f"{below}; compact() must only fold epochs the "
-                "streaming checkpoint can no longer replay")
+        self.log.assert_live(int(epoch_id))
         ex = (batch_df.select(self.id_col, self.source_col,
                               self.text_col)
               .withColumn("__h", portable_hash(
@@ -774,7 +658,7 @@ class TokenBudgetAdmissionSink:
                             "mix_rank", "cum_tokens"))
         # overwrite keeps an at-least-once replay idempotent
         admitted.write.mode("overwrite").parquet(
-            os.path.join(self.admissions_dir, f"epoch={int(epoch_id)}"))
+            epoch_dir(self.admissions_dir, epoch_id))
         # the state delta counts every SEEN document (admitted or not):
         # the cumulative is over the full prefix, which is exactly what
         # keeps a closed source closed
@@ -782,5 +666,5 @@ class TokenBudgetAdmissionSink:
                  .agg(F.count(F.lit(1)).cast("bigint").alias("n_seen"),
                       F.sum("__nt").cast("bigint").alias("nt_seen")))
         delta.write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, f"epoch={int(epoch_id)}"))
+            epoch_dir(self.state_dir, epoch_id))
         release_checkpoint(scored)

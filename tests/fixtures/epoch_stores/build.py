@@ -27,8 +27,6 @@ import shutil
 import sys
 import tempfile
 
-from pyspark.sql import functions as F
-
 HERE = os.path.dirname(os.path.abspath(__file__))
 STORES = ("bucketed", "embedding", "line", "admission", "ccnet", "ann")
 

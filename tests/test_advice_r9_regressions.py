@@ -83,14 +83,14 @@ def test_reflag_rejects_below_compaction_watermark(spark):
         store(_docs(spark, [(10, _near("pA"))]), epoch_id=0)
         store(_docs(spark, [(20, _near("pB"))]), epoch_id=1)
         store.compact(below_epoch=2)
-        assert store._meta()["below"] == 2
+        assert store.log.meta()["below"] == 2
         # live epoch dirs below 2 are gone, so the old dir-scan-only
         # check passed here — the commit then regressed meta['below']
         with pytest.raises(RuntimeError, match="compaction watermark"):
             store.reflag(below_epoch=1)
-        assert store._meta()["below"] == 2  # unchanged
+        assert store.log.meta()["below"] == 2  # unchanged
         store.reflag(below_epoch=2)  # at the watermark: fine
-        assert store._meta()["below"] == 2
+        assert store.log.meta()["below"] == 2
         flags = {r.doc_id for r in store.all_flags().collect()}
         assert flags == {10, 20}
     finally:

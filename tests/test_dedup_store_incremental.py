@@ -82,7 +82,7 @@ def test_incremental_equals_full_reflag_and_batch(spark):
         assert _flags_dict(incr.all_flags()) == want
         # the repair is an overlay, not a rewrite: epoch dirs intact,
         # one committed delta
-        assert incr._meta().get("nrep", 0) == 1
+        assert incr.log.meta().get("nrep", 0) == 1
         assert os.path.isdir(os.path.join(dirs[1], "repairs", "r0"))
 
         # future ingests read THROUGH the overlay: a doc byte-equal to
@@ -102,7 +102,7 @@ def test_incremental_equals_full_reflag_and_batch(spark):
         # sweeps it; verdicts unchanged
         incr.compact(below_epoch=3)
         assert _flags_dict(incr.all_flags()) == want2
-        assert incr._meta().get("nrep", 0) == 0
+        assert incr.log.meta().get("nrep", 0) == 0
         assert not os.path.isdir(os.path.join(dirs[1], "repairs"))
     finally:
         for d in dirs:
@@ -188,13 +188,13 @@ def test_two_successive_incremental_repairs(spark):
         store(b2, epoch_id=2)
         store(b3, epoch_id=3)
         store.reflag_incremental([3], below_epoch=4)
-        assert store._meta().get("nrep", 0) == 2
+        assert store.log.meta().get("nrep", 0) == 2
         want = _flags_dict(incremental_dedup_flags(
             b0.unionByName(b1).unionByName(b2).unionByName(b3)))
         assert _flags_dict(store.all_flags()) == want
         # full reflag folds both overlays away and agrees
         store.reflag(below_epoch=4)
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
         assert _flags_dict(store.all_flags()) == want
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -267,7 +267,7 @@ def test_embedding_incremental_equals_full_reflag_and_batch(spark):
         # quiescent compact folds the overlay away
         incr.compact(below_epoch=3)
         assert fdict(incr.all_flags()) == want2
-        assert incr._meta().get("nrep", 0) == 0
+        assert incr.log.meta().get("nrep", 0) == 0
     finally:
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -353,14 +353,14 @@ def test_orphan_repair_dir_is_invisible_and_overwritten(spark):
 
         # invisible: nrep is still 0, reads are the stale pre-repair
         # verdicts, not an error
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
         assert _flags_dict(store.all_flags()) == stale
 
         # the next repair overwrites the orphan and commits
         store.reflag_incremental([1], below_epoch=2)
         want = _flags_dict(incremental_dedup_flags(b0.unionByName(b1)))
         assert _flags_dict(store.all_flags()) == want
-        assert store._meta().get("nrep", 0) == 1
+        assert store.log.meta().get("nrep", 0) == 1
         # the overwrite replaced the orphan's contents wholesale
         assert not os.path.exists(os.path.join(orphan, "junk.txt"))
     finally:
@@ -628,11 +628,11 @@ def test_repair_rejects_omitted_late_epoch(spark):
         with pytest.raises(RuntimeError, match=r"\[2\].*missing"):
             store.reflag_incremental([1], below_epoch=3)
         # nothing was committed by the refusal
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
         # the full set (or a superset) passes, and marks both repaired
         store.reflag_incremental([1, 2], below_epoch=3)
         assert store._outstanding_late() == set()
-        assert store._meta().get("repaired") == [1, 2]
+        assert store.log.meta().get("repaired") == [1, 2]
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -649,10 +649,10 @@ def test_repair_derives_late_set_when_none(spark):
         incr.reflag_incremental(below_epoch=2)        # derived
         assert _flags_dict(incr.all_flags()) == _flags_dict(
             full.all_flags())
-        assert incr._meta().get("repaired") == [1]
+        assert incr.log.meta().get("repaired") == [1]
         # a second derived call finds nothing outstanding: no new delta
         incr.reflag_incremental(below_epoch=2)
-        assert incr._meta().get("nrep", 0) == 1
+        assert incr.log.meta().get("nrep", 0) == 1
     finally:
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -673,7 +673,7 @@ def test_ordered_store_derives_empty_even_after_replay(spark):
         store(b1, epoch_id=1)                       # replay
         assert store._outstanding_late() == set()
         store.reflag_incremental(below_epoch=2)     # derives empty
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -690,11 +690,11 @@ def test_compacting_unrepaired_late_epoch_disables_bounded_repair(spark):
         store(b0, epoch_id=0)
         store(b1, epoch_id=1)
         store.compact(below_epoch=2)                # folds the lateness
-        assert store._meta().get("needs_full_reflag") is True
+        assert store.log.meta().get("needs_full_reflag") is True
         with pytest.raises(RuntimeError, match="full reflag"):
             store.reflag_incremental(below_epoch=2)
         store.reflag(below_epoch=2)                 # the one true fix
-        assert not store._meta().get("needs_full_reflag")
+        assert not store.log.meta().get("needs_full_reflag")
         want = _flags_dict(incremental_dedup_flags(b0.unionByName(b1)))
         assert _flags_dict(store.all_flags()) == want
         # and the bounded repair is usable again afterwards
@@ -783,12 +783,12 @@ def test_hint_created_store_full_maintenance_lifecycle(spark):
         store(b2, epoch_id=2)
         store(b3, epoch_id=3)
         store.reflag_incremental(below_epoch=4)        # stacked delta
-        assert store._meta().get("nrep", 0) == 2
+        assert store.log.meta().get("nrep", 0) == 2
         assert fdict(store.all_flags()) == want(b0, b1, b2, b3)
 
         store.compact(below_epoch=4)                   # folds deltas
-        assert store._meta().get("nrep", 0) == 0
-        assert not store._meta().get("needs_full_reflag")
+        assert store.log.meta().get("nrep", 0) == 0
+        assert not store.log.meta().get("needs_full_reflag")
         assert fdict(store.all_flags()) == want(b0, b1, b2, b3)
 
         store(b4, epoch_id=4)                          # reads the base
@@ -832,11 +832,11 @@ def test_capped_stacked_repairs_and_compact(spark):
         full.reflag(below_epoch=4)
         want = _flags_dict(full.all_flags())
         assert _flags_dict(incr.all_flags()) == want
-        assert incr._meta().get("nrep", 0) == 2
+        assert incr.log.meta().get("nrep", 0) == 2
         # quiescent compact folds both overlays; verdicts unchanged
         incr.compact(below_epoch=4)
-        assert incr._meta().get("nrep", 0) == 0
-        assert not incr._meta().get("needs_full_reflag")
+        assert incr.log.meta().get("nrep", 0) == 0
+        assert not incr.log.meta().get("needs_full_reflag")
         assert _flags_dict(incr.all_flags()) == want
         # post-compact ingest reads the folded base identically
         b4 = _docs(spark, [(40, _near("pA")), (41, _distinct(41))])
@@ -864,16 +864,16 @@ def test_untracked_legacy_epoch_refuses_derived_repair(spark):
         store(b0, epoch_id=0)
         store(b1, epoch_id=1)
         # strip epoch 1's emm entry — the legacy shape
-        meta = store._meta()
+        meta = store.log.meta()
         del meta["emm"]["1"]
-        store._write_meta(meta)
+        store.log.write_meta(meta)
         assert store._untracked_live_epochs() == [1]
         # derived set can no longer see epoch 1 as late...
         assert store._outstanding_late() == set()
         # ...so the derived path refuses instead of no-opping
         with pytest.raises(RuntimeError, match="no recorded id range"):
             store.reflag_incremental(below_epoch=2)
-        assert store._meta().get("nrep", 0) == 0    # nothing committed
+        assert store.log.meta().get("nrep", 0) == 0    # nothing committed
         # escape hatch 1: the caller names the late set explicitly
         store.reflag_incremental([1], below_epoch=2)
         flags = _flags_dict(store.all_flags())
@@ -894,9 +894,9 @@ def test_untracked_epoch_full_reflag_escape_hatch(spark):
         store = BucketedDedupStore(spark, d)
         store(b0, epoch_id=0)
         store(b1, epoch_id=1)
-        meta = store._meta()
+        meta = store.log.meta()
         del meta["emm"]["1"]
-        store._write_meta(meta)
+        store.log.write_meta(meta)
         with pytest.raises(RuntimeError, match="no recorded id range"):
             store.reflag_incremental(below_epoch=2)
         store.reflag(below_epoch=2)                 # full rewrite
@@ -906,7 +906,7 @@ def test_untracked_epoch_full_reflag_escape_hatch(spark):
         # tracked ingests resume; derived path accepted again
         store(_docs(spark, [(30, _distinct(30))]), epoch_id=2)
         store.reflag_incremental(below_epoch=3)     # derives empty set
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -924,7 +924,7 @@ def test_empty_epoch_partition_does_not_trigger_refusal(spark):
         store(empty, epoch_id=1)
         assert store._untracked_live_epochs() == []
         store.reflag_incremental(below_epoch=2)     # derives empty set
-        assert store._meta().get("nrep", 0) == 0
+        assert store.log.meta().get("nrep", 0) == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -942,16 +942,16 @@ def test_compacting_untracked_epoch_disables_bounded_repair(spark):
         store = BucketedDedupStore(spark, d)
         store(b0, epoch_id=0)
         store(b1, epoch_id=1)
-        meta = store._meta()
+        meta = store.log.meta()
         del meta["emm"]["1"]                        # legacy shape
-        store._write_meta(meta)
+        store.log.write_meta(meta)
         store.compact(below_epoch=2)                # folds epoch 1
-        assert store._meta().get("needs_full_reflag") is True
+        assert store.log.meta().get("needs_full_reflag") is True
         store(_docs(spark, [(30, _distinct(30))]), epoch_id=2)
         with pytest.raises(RuntimeError, match="full"):
             store.reflag_incremental(below_epoch=3)
         store.reflag(below_epoch=3)                 # clears the flag
-        assert not store._meta().get("needs_full_reflag")
+        assert not store.log.meta().get("needs_full_reflag")
         flags = _flags_dict(store.all_flags())
         assert flags[20] == (True, 10)              # verdict repaired
     finally:

@@ -162,7 +162,7 @@ def test_bucketed_store_reflag_repairs_out_of_order(spark):
         live = [e for e in os.listdir(store.buckets_dir)
                 if e.startswith("epoch=")]
         assert live == []
-        assert store._meta()["below"] == 3
+        assert store.log.meta()["below"] == 3
         # and the store still works after the fold: a doc byte-equal
         # to 1's text flags to the EARLIEST near-match (0), matching
         # the batch operator
@@ -430,7 +430,7 @@ def test_store_params_corrupt_file_fails_loudly(spark):
     try:
         store = BucketedDedupStore(spark, d)
         store(_docs(spark, [(1, _distinct(1))]), epoch_id=0)
-        with open(store.params_path, "w") as f:
+        with open(store.log.params_path, "w") as f:
             f.write("{not json")
         with pytest.raises(RuntimeError, match="corrupt"):
             BucketedDedupStore(spark, d)(
@@ -453,14 +453,14 @@ def test_legacy_store_without_params_refuses_auto_pin(spark):
     try:
         store = BucketedDedupStore(spark, d)
         store(b0, epoch_id=0)
-        os.remove(store.params_path)  # simulate a pre-pinning store
+        os.remove(store.log.params_path)  # simulate a pre-pinning store
         with pytest.raises(RuntimeError, match="legacy|auto-pin"):
             BucketedDedupStore(spark, d)(
                 _docs(spark, [(2, _distinct(2))]), epoch_id=1)
         # the guard must not have pinned anything
-        assert not os.path.exists(store.params_path)
+        assert not os.path.exists(store.log.params_path)
         # explicit migration: write the creation-time values by hand
-        with open(store.params_path, "w") as f:
+        with open(store.log.params_path, "w") as f:
             json.dump(store._signature_params(), f)
         BucketedDedupStore(spark, d)(
             _docs(spark, [(2, _distinct(2))]), epoch_id=1)
@@ -479,7 +479,7 @@ def test_empty_dir_still_auto_pins(spark):
     try:
         store = BucketedDedupStore(spark, d)
         store(_docs(spark, [(1, _distinct(1))]), epoch_id=0)
-        assert os.path.exists(store.params_path)
+        assert os.path.exists(store.log.params_path)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -506,7 +506,7 @@ def test_embedding_store_expected_corpus_sizes_bits(spark):
         want_bits = recommended_lsh_bits(1_000_000)
         assert store.n_bits == want_bits > 8
         store(b0, epoch_id=0)
-        with open(store.params_path) as f:
+        with open(store.log.params_path) as f:
             assert json.load(f)["n_bits"] == want_bits
         # reopening with the same hint resolves to the same pin
         EmbeddingDedupStore(spark, d, dim=4, expected_corpus=1_000_000)(

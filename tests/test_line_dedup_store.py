@@ -232,7 +232,7 @@ def test_line_store_compact_preserves_results_and_repairability(spark):
         store.compact(below_epoch=2)        # quiescent: folds overlays
         assert len(store._repair_dirs()) == 0
         assert not os.path.isdir(store.repairs_dir)
-        assert store._meta() == {"gen": 0, "below": 2}
+        assert store.log.meta() == {"gen": 0, "below": 2}
         # folded epoch partitions are swept; the base carries them now
         for p in (store.blocks_dir, store.elections_dir,
                   store.results_dir):

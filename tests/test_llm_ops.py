@@ -2718,3 +2718,31 @@ def test_ccnet_curated_empty_gate_is_empty_not_an_error(spark):
     assert got.count() == 0
     assert {"doc_id", "source", "text",
             "mix_rank", "cum_tokens"} <= set(got.columns)
+
+
+def test_ccnet_receipt_error_path_joins_its_worker_thread(spark,
+                                                          monkeypatch):
+    """ccnet_receipt overlaps one receipt aggregate on a worker thread;
+    an exception from the chain around it must propagate AND leave no
+    executor thread behind."""
+    import threading
+
+    import axonops_schema_registry_spark.llm.text as text_mod
+    from axonops_schema_registry_spark.llm.ccnet import ccnet_receipt
+
+    def boom(*_a, **_k):
+        raise RuntimeError("perplexity failed")
+
+    def workers():
+        return {t for t in threading.enumerate() if t.is_alive()
+                and t.name.startswith("ThreadPoolExecutor")}
+
+    docs = spark.createDataFrame(
+        [(i, f"src{i % 2}",
+          f"the d{i}a of d{i}b and d{i}c to d{i}d the d{i}e")
+         for i in range(8)], "doc_id bigint, source string, text string")
+    monkeypatch.setattr(text_mod, "perplexity_buckets", boom)
+    before = workers()
+    with pytest.raises(RuntimeError, match="perplexity failed"):
+        ccnet_receipt(docs)
+    assert workers() - before == set()

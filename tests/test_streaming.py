@@ -80,6 +80,36 @@ def test_stream_windowed_metrics_with_watermark(spark, stream_source,
     assert got == want and len(got) > 0
 
 
+def test_stream_dedup_then_windowed_metrics_composes(spark, sf_dir,
+                                                     audit_batch):
+    """The audit transforms compose on one stream: the first sets the
+    event-time watermark and the second keeps it (Spark refuses to
+    redefine one).  The source delivers every event twice, in two
+    micro-batches; the composed stream equals the composed batch form
+    over one copy."""
+    d = tempfile.mkdtemp(prefix="audit_stream_twice_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_composed_")
+    try:
+        for i in range(2):
+            shutil.copy(os.path.join(sf_dir, "events.parquet"),
+                        os.path.join(d, f"part-{i}.parquet"))
+        stream = audit_stream_from_events(spark, d)
+        agg = windowed_metrics(dedup_by_request_id(stream), window="1 hour")
+        q = (agg.writeStream.format("memory").queryName("composed_sink")
+             .outputMode("complete")
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        got = sorted(tuple(r) for r in
+                     spark.sql("SELECT * FROM composed_sink").collect())
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    want = sorted(tuple(r) for r in windowed_metrics(
+        dedup_by_request_id(audit_batch), window="1 hour").collect())
+    assert got == want and len(got) > 0
+
+
 def test_rate_limit_flags_batch_mode(audit_batch):
     flags = rate_limit_flags(audit_batch, window="1 hour",
                              max_per_window=3).collect()
@@ -854,7 +884,7 @@ def test_embedding_dedup_store_equals_batch(spark, sf_dir):
 def test_dedup_store_fails_loudly_on_corrupt_meta(spark):
     """A present-but-unreadable meta.json is store corruption (the
     compacted base would become invisible and dup-flagging would
-    silently stop) — _meta must raise, not default to empty state;
+    silently stop) — the meta read must raise, not default to empty state;
     only a MISSING file means 'no compaction yet'."""
     from axonops_schema_registry_spark.streaming.dedup_store import (
         BucketedDedupStore,
@@ -863,16 +893,16 @@ def test_dedup_store_fails_loudly_on_corrupt_meta(spark):
     d = tempfile.mkdtemp(prefix="meta_corrupt_")
     try:
         store = BucketedDedupStore(spark, d)
-        assert store._meta() == {"gen": -1, "below": 0}  # missing: ok
-        with open(store.meta_path, "w") as f:
+        assert store.log.meta() == {"gen": -1, "below": 0}  # missing: ok
+        with open(store.log.meta_path, "w") as f:
             f.write("{truncated")  # simulated torn write
         with pytest.raises(RuntimeError, match="corrupt dedup-store"):
-            store._meta()
+            store.log.meta()
         # meta pointing at a missing base generation is equally loud
-        with open(store.meta_path, "w") as f:
+        with open(store.log.meta_path, "w") as f:
             f.write('{"gen": 0, "below": 1}')
         with pytest.raises(RuntimeError, match="missing base"):
-            store._stored(store.buckets_dir, 5)
+            store.log.read(store.buckets_dir, 5)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -1359,7 +1389,7 @@ def test_token_budget_admission_compact(spark, tmp_path):
     got2 = {r.doc_id: (r.mix_rank, r.cum_tokens)
             for r in comp.all_admissions(spark).collect()}
     assert got2 == want
-    assert comp._meta() == {"gen": 1, "below": 3}
+    assert comp.log.meta() == {"gen": 1, "below": 3}
 
 
 def test_budget_revision_stream_equals_batch(spark, sf_dir):
