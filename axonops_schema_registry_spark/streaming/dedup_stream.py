@@ -594,7 +594,7 @@ class TokenBudgetAdmissionSink:
 
     # -- reads ----------------------------------------------------------------
 
-    def _prior_state(self, spark, before_epoch: int) -> DataFrame | None:
+    def _prior_state(self, before_epoch: int) -> DataFrame | None:
         deltas = self.log.read(self.state_dir, before_epoch)
         if deltas is None:
             return None
@@ -626,7 +626,7 @@ class TokenBudgetAdmissionSink:
                   F.col(self.id_col).cast("string")))
               .withColumn("__nt", F.size(F.split(
                   F.col(self.text_col), " ")).cast("bigint")))
-        prior = self._prior_state(spark, int(epoch_id))
+        prior = self._prior_state(int(epoch_id))
         if prior is not None:
             ex = (ex.join(F.broadcast(prior), self.source_col, "left")
                   .na.fill({"__prior_seen": 0, "__prior_nt": 0}))
