@@ -16,6 +16,15 @@ One object bundling the query surface a reference user actually calls
 Every method returns a DataFrame (lazy; callers compose further or
 collect).  The corpus contract is the FIXTURES.md §1 ``schemas`` shape:
 (subject, version, schema_type, schema_text[, deleted][, fingerprint]).
+
+Point reads run the fewest jobs their answer needs: ``latest(s)`` is a
+per-partition top-1 merged on the driver (no exchange, one job),
+``history(s)`` moves only that subject's rows into one partition and
+sorts them there (one exchange, no range-partitioner sampling job; a
+``repartition(1)``, not ``coalesce(1)``, so the corpus scan stays
+parallel), and ``statistics()`` counts subjects per type with one
+exchange (``size(collect_set)``, exact, instead of ``countDistinct``'s
+two).
 """
 
 from __future__ import annotations
@@ -43,6 +52,7 @@ class RegistryAnalytics:
         if "deleted" not in corpus.columns:
             corpus = corpus.withColumn("deleted", F.lit(False))
         self.corpus = corpus
+        self._live = corpus.filter(~F.col("deleted"))
         self.sf_dir = sf_dir
 
     @classmethod
@@ -59,7 +69,7 @@ class RegistryAnalytics:
     # -- read surface ------------------------------------------------------
 
     def live(self) -> DataFrame:
-        return self.corpus.filter(~F.col("deleted"))
+        return self._live
 
     def subjects(self) -> DataFrame:
         """GET /subjects"""
@@ -67,16 +77,17 @@ class RegistryAnalytics:
 
     def latest(self, subject: str | None = None) -> DataFrame:
         """GET /subjects/{s}/versions/latest (all subjects when None)."""
-        live = self.live()
-        if subject is not None:
-            live = live.filter(F.col("subject") == subject)
-        return latest_per_key(live, ["subject"], ["version"])
+        if subject is None:
+            return latest_per_key(self._live, ["subject"], ["version"])
+        return (self._live.filter(F.col("subject") == subject)
+                .orderBy(F.desc("version")).limit(1))
 
     def history(self, subject: str,
                 include_deleted: bool = False) -> DataFrame:
         """GET /subjects/{s}/versions"""
-        src = self.corpus if include_deleted else self.live()
-        return src.filter(F.col("subject") == subject).orderBy("version")
+        src = self.corpus if include_deleted else self._live
+        return (src.filter(F.col("subject") == subject)
+                .repartition(1).sortWithinPartitions("version"))
 
     def versions_view(self) -> DataFrame:
         """The schema_versions aggregate view."""
@@ -86,8 +97,11 @@ class RegistryAnalytics:
 
     def statistics(self) -> DataFrame:
         """GET /analysis/statistics"""
-        return (self.live().groupBy("schema_type")
-                .agg(F.countDistinct("subject").alias("n_subjects"),
+        # a type's subject set holds at most the registry's subjects,
+        # which GET /subjects already returns in one response
+        return (self._live.groupBy("schema_type")
+                .agg(F.size(F.collect_set("subject")).cast("bigint")
+                     .alias("n_subjects"),
                      F.count(F.lit(1)).alias("n_versions")))
 
     # -- schema intelligence ----------------------------------------------
@@ -155,7 +169,8 @@ class RegistryAnalytics:
               schema_type: str = "AVRO") -> tuple[bool, list[str]]:
         """POST /compatibility/subjects/{s}/versions — driver-side verdict
         against the subject's (collected, capped) history."""
-        rows = (self.history(subject).select("version", "schema_text")
+        rows = (self._live.filter(F.col("subject") == subject)
+                .select("version", "schema_text")
                 .orderBy(F.desc("version")).limit(self.CHECK_HISTORY_CAP)
                 .collect())
         history = [r.schema_text for r in sorted(rows,

@@ -671,6 +671,14 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
     #     before it), stop the batch.  Higher-order creations are
     #     dominated: their bound is <= the first-order bound and
     #     their (lhs, rhs) sorts lex-after the first-order pair.
+    #     Both bounds assume every applied ab is a NEW symbol: were ab
+    #     already a symbol (ab+c after a+bc), created (x,abc) would add
+    #     onto the existing pair's count.  Greedy never makes one
+    #     string twice — at the earlier fold the later pair's span is
+    #     segmented as in the earlier occurrence (no merge crosses
+    #     either span's edge, so the left-to-right scan treats both
+    #     alike), so it folds there too — but the batch breaks on such
+    #     a collision rather than lean on that proof.
     #   * pairs OUTSIDE the fetched window have count <= the last
     #     fetched count, so a candidate tying that floor stops the
     #     batch (an invisible tie could win on the lex tie-break).
@@ -691,6 +699,7 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
             break
         fetched_all = len(top) < top_m
         floor_cnt = int(top[-1]["pair_count"])
+        prior = {lhs + rhs for _, lhs, rhs, _ in merges}
         applied: list[tuple[str, str, int]] = []
         for row in top:
             if len(merges) + len(applied) >= k:
@@ -704,6 +713,9 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
                     break  # overlaps an applied fold: count unknown
                 if not fetched_all and cnt == floor_cnt:
                     break  # an unfetched tie could win on lex order
+                made = [pa + pb for pa, pb, _ in applied]
+                if set(made) & prior or len(set(made)) < len(made):
+                    break  # a fold remade a symbol: created counts add
                 unsafe = False
                 for pa, pb, pcnt in applied:
                     merged = pa + pb

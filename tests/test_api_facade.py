@@ -7,8 +7,12 @@ from pyspark.sql import functions as F
 
 from axonops_schema_registry_spark.api import RegistryAnalytics
 from axonops_schema_registry_spark.registry.model import (
+    AVRO_USER_V1,
+    AVRO_USER_V2,
     AVRO_USER_V2_BAD,
     AVRO_USER_V3,
+    JSON_USER_V1,
+    JSON_USER_V2,
     fixture_schemas,
 )
 
@@ -150,3 +154,127 @@ def test_prometheus_gauges(spark, sf_dir):
                        "schema_registry_subjects_total",
                        "schema_registry_schemas_total"}
     assert all(r.value > 0 for r in rows)
+
+
+# -- the re-planned point reads against their earlier formulations -------
+
+_DIFF_ROWS = [
+    # (subject, version, schema_type, schema_text, deleted, file)
+    ("gaps-value", 1, "AVRO", AVRO_USER_V1, False, 0),
+    ("gaps-value", 3, "AVRO", AVRO_USER_V2, False, 1),
+    ("gaps-value", 7, "AVRO", AVRO_USER_V3, False, 2),
+    ("tomb-value", 1, "AVRO", AVRO_USER_V1, False, 2),
+    ("tomb-value", 2, "AVRO", AVRO_USER_V2, False, 0),
+    ("tomb-value", 3, "AVRO", AVRO_USER_V2_BAD, True, 1),
+    ("gone-value", 1, "AVRO", AVRO_USER_V1, True, 1),
+    ("gone-value", 2, "AVRO", AVRO_USER_V2, True, 2),
+    ("mixed-value", 1, "AVRO", AVRO_USER_V1, False, 0),
+    ("mixed-value", 2, "JSON", JSON_USER_V1, False, 1),
+    ("mixed-value", 4, "JSON", JSON_USER_V2, False, 2),
+    ("it's-value", 2, "AVRO", AVRO_USER_V1, False, 1),
+    ("it's-value", 5, "AVRO", AVRO_USER_V2, False, 0),
+]
+_DIFF_SUBJECTS = ["gaps-value", "tomb-value", "gone-value", "mixed-value",
+                  "it's-value", "ghost-value"]
+
+
+@pytest.fixture(scope="module")
+def diff_reg(spark, tmp_path_factory):
+    """A facade over a corpus written as three parquet files, so one
+    subject's versions sit in different scan partitions."""
+    path = str(tmp_path_factory.mktemp("diff_corpus") / "corpus.parquet")
+    schema = ("subject string, version int, schema_type string, "
+              "schema_text string, deleted boolean")
+    for part in range(3):
+        rows = [r[:5] for r in _DIFF_ROWS if r[5] == part]
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(path)
+    corpus = spark.read.parquet(path)
+    assert corpus.rdd.getNumPartitions() >= 3
+    return RegistryAnalytics(spark, corpus)
+
+
+def _ref_latest(live, subject):
+    """``latest(subject)`` as a row_number window over the subject."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("subject").orderBy(F.desc("version"))
+    return (live.filter(F.col("subject") == subject)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1).drop("__rn"))
+
+
+def _same(got, want, ordered=False):
+    assert got.schema == want.schema
+    g, w = got.collect(), want.collect()
+    if not ordered:
+        g, w = sorted(g), sorted(w)
+    assert g == w
+
+
+def test_replanned_reads_match_reference(diff_reg):
+    corpus = diff_reg.corpus
+    live = corpus.filter(~F.col("deleted"))
+
+    def ref_history(subject, include_deleted):
+        src = corpus if include_deleted else live
+        return src.filter(F.col("subject") == subject).orderBy("version")
+
+    for s in _DIFF_SUBJECTS:
+        _same(diff_reg.latest(s), _ref_latest(live, s))
+        for inc in (False, True):
+            _same(diff_reg.history(s, include_deleted=inc),
+                  ref_history(s, inc), ordered=True)
+    assert [r.version for r in diff_reg.latest("tomb-value").collect()] \
+        == [2]
+    assert diff_reg.latest("gone-value").collect() == []
+    assert [r.version for r in diff_reg.history("gaps-value").collect()] \
+        == [1, 3, 7]
+    assert [r.version for r in diff_reg.history(
+        "tomb-value", include_deleted=True).collect()] == [1, 2, 3]
+
+    _same(diff_reg.statistics(),
+          live.groupBy("schema_type")
+          .agg(F.countDistinct("subject").alias("n_subjects"),
+               F.count(F.lit(1)).alias("n_versions")))
+    stats = {r.schema_type: (r.n_subjects, r.n_versions)
+             for r in diff_reg.statistics().collect()}
+    assert stats == {"AVRO": (4, 8), "JSON": (1, 2)}
+
+
+def test_replanned_check_and_evolution_match_reference(diff_reg):
+    from axonops_schema_registry_spark.registry.compat import (
+        check_compatibility,
+    )
+    from axonops_schema_registry_spark.registry.evolution import (
+        suggest_and_verify,
+    )
+
+    live = diff_reg.corpus.filter(~F.col("deleted"))
+
+    def ref_check(new_schema, subject, mode):
+        rows = (live.filter(F.col("subject") == subject)
+                .orderBy("version").select("version", "schema_text")
+                .orderBy(F.desc("version"))
+                .limit(diff_reg.CHECK_HISTORY_CAP).collect())
+        history = [r.schema_text
+                   for r in sorted(rows, key=lambda r: r.version)]
+        return check_compatibility(new_schema, history, mode, "AVRO")
+
+    assert diff_reg.check(AVRO_USER_V3, "gaps-value")[0]
+    assert not diff_reg.check(AVRO_USER_V2_BAD, "gaps-value",
+                              "BACKWARD_TRANSITIVE")[0]
+    for s in _DIFF_SUBJECTS:
+        for new in (AVRO_USER_V3, AVRO_USER_V2_BAD):
+            for mode in ("BACKWARD", "BACKWARD_TRANSITIVE",
+                         "FORWARD_TRANSITIVE", "FULL_TRANSITIVE"):
+                assert diff_reg.check(new, s, mode) == \
+                    ref_check(new, s, mode), (s, mode)
+
+        latest = _ref_latest(live, s).take(1)
+        want = ({"error": "Subject not found"} if not latest else
+                suggest_and_verify(latest[0].schema_text,
+                                   latest[0].schema_type, "BACKWARD",
+                                   "add_field", "email", "string", ""))
+        assert diff_reg.suggest_evolution(
+            s, "add_field", "email", "string") == want, s

@@ -888,6 +888,39 @@ def test_jpeg_entropy_decode_roundtrip(spark):
                         e["sum_y"])
 
 
+def _bpe_ref_train(word_counts, k):
+    """Pure-Python greedy BPE over symbol lists: count adjacent pairs
+    (weighted by word count), merge the top pair (count DESC, pair ASC)
+    left to right in every word, repeat k times."""
+    vocab = [(list(w), n) for w, n in sorted(word_counts.items())]
+    merges = []
+    for step in range(1, k + 1):
+        pairs = {}
+        for syms, n in vocab:
+            for i in range(len(syms) - 1):
+                p = (syms[i], syms[i + 1])
+                pairs[p] = pairs.get(p, 0) + n
+        if not pairs:
+            break
+        (a, b), c = min(pairs.items(),
+                        key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, a, b, c))
+        nxt = []
+        for syms, n in vocab:
+            out, i = [], 0
+            while i < len(syms):
+                if (i + 1 < len(syms) and syms[i] == a
+                        and syms[i + 1] == b):
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            nxt.append((out, n))
+        vocab = nxt
+    return merges
+
+
 def test_bpe_merges_match_pure_python_reference(spark):
     """Cross-implementation check: the Spark BPE trainer/encoder
     (driver loop + replace semantics) must equal an independently
@@ -900,35 +933,6 @@ def test_bpe_merges_match_pure_python_reference(spark):
         bpe_merges,
         bpe_tokenize_counts,
     )
-
-    def ref_train(word_counts, k):
-        vocab = [(list(w), n) for w, n in sorted(word_counts.items())]
-        merges = []
-        for step in range(1, k + 1):
-            pairs = {}
-            for syms, n in vocab:
-                for i in range(len(syms) - 1):
-                    p = (syms[i], syms[i + 1])
-                    pairs[p] = pairs.get(p, 0) + n
-            if not pairs:
-                break
-            (a, b), c = min(pairs.items(),
-                            key=lambda kv: (-kv[1], kv[0]))
-            merges.append((step, a, b, c))
-            nxt = []
-            for syms, n in vocab:
-                out, i = [], 0
-                while i < len(syms):
-                    if (i + 1 < len(syms) and syms[i] == a
-                            and syms[i + 1] == b):
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                nxt.append((out, n))
-            vocab = nxt
-        return merges
 
     def ref_encode(word, merges):
         syms = list(word)
@@ -961,7 +965,7 @@ def test_bpe_merges_match_pure_python_reference(spark):
         for _, text in docs_py:
             for w in text.split():
                 wc[w] = wc.get(w, 0) + 1
-        want = ref_train(wc, 6)
+        want = _bpe_ref_train(wc, 6)
         got = [(r.step, r.lhs, r.rhs, r.pair_count)
                for r in bpe_merges(docs, "text", k=6)
                .orderBy("step").collect()]
@@ -974,6 +978,28 @@ def test_bpe_merges_match_pure_python_reference(spark):
                       for r in bpe_tokenize_counts(
                           docs, "doc_id", "text", k=6).collect()}
         assert got_counts == want_counts, f"seed {seed}"
+
+
+def test_bpe_merges_exact_where_concatenations_could_collide(spark):
+    """``ab``+``c`` and ``a``+``bc`` spell the same symbol.  This corpus
+    makes ``ab``, ``bc`` and ``abc`` all symbols, so a fold remaking an
+    existing string would let created pairs add onto existing counts.
+    Greedy never remakes one (no merge's lhs+rhs repeats), and the
+    batched elections must replay it exactly."""
+    from axonops_schema_registry_spark.llm.text import bpe_merges
+
+    wc = {"abc": 4, "abd": 3, "ebc": 3, "aebc": 2, "abcbc": 2, "xy": 5,
+          "xyz": 1}
+    docs = spark.createDataFrame(
+        [(i, " ".join([w] * n)) for i, (w, n) in enumerate(wc.items())],
+        "doc_id bigint, text string")
+    want = _bpe_ref_train(wc, 9)
+    made = [a + b for _, a, b, _ in want]
+    assert {"ab", "bc", "abc"} <= set(made)
+    assert len(set(made)) == len(made)
+    got = [(r.step, r.lhs, r.rhs, r.pair_count)
+           for r in bpe_merges(docs, "text", k=9).orderBy("step").collect()]
+    assert got == want
 
 
 def _py_hash48(s: str) -> int:

@@ -68,3 +68,31 @@ def test_no_cartesian_in_similarity(spark, sf_dir):
 def test_registration_uses_sort_merge_or_hash_joins(spark, sf_dir):
     plan = _plan(spark, sf_dir, "r4_registration_batch")
     assert "CartesianProduct" not in plan
+
+def test_facade_point_reads_shuffle_only_where_needed(spark, tmp_path):
+    """Registry point reads run the fewest exchanges their answer needs:
+    ``latest(s)`` is a per-partition top-1 (none), ``history(s)`` moves
+    the subject's rows into one partition (one, no range sort),
+    ``statistics()`` and ``subjects()`` aggregate once (one each)."""
+    import re
+
+    from axonops_schema_registry_spark.api import RegistryAnalytics
+    from axonops_schema_registry_spark.registry.model import (
+        fixture_schemas,
+    )
+
+    path = str(tmp_path / "corpus.parquet")
+    fixture_schemas(spark).repartition(3).write.parquet(path)
+    reg = RegistryAnalytics(spark, spark.read.parquet(path))
+
+    def exchanges(df) -> list[str]:
+        df.collect()  # materialize so AQE finalizes the physical plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        return re.findall(r"\w*Exchange [^\n]*", final)
+
+    assert exchanges(reg.latest("user-value")) == []
+    (hist,) = exchanges(reg.history("user-value"))
+    assert hist.startswith("Exchange SinglePartition")
+    assert len(exchanges(reg.statistics())) == 1
+    assert len(exchanges(reg.subjects())) == 1
